@@ -54,6 +54,13 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when no cluster
     is configured; on a real cluster, leave ``master`` unset and submit
     via ``spark-submit`` so the cluster manager decides.
+
+    The builder carries only launch and static confs; every runtime conf
+    comes from :func:`tune`, the one place both this factory and a
+    driver-owned session get them. ``spark.sql.codegen.cache.maxEntries``
+    is a static SQL conf: it takes effect only on sessions this factory
+    builds (the benchmark harnesses and the tests). ``tune`` cannot set
+    it, so a driver-owned session keeps Spark's default of 100.
     """
     builder = SparkSession.builder.appName(app_name)
     builder = builder.master(master or f"local[{DEFAULT_CPUS}]")
@@ -61,11 +68,6 @@ def get_spark(
         builder.config(
             "spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_CPUS)
         )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config(
             "spark.sql.warehouse.dir",
@@ -73,6 +75,11 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Spark keeps at most this many compiled whole-stage codegen
+        # classes (default 100). One analytics round needs ~197 and one
+        # star pass ~229, so at the default every warm round recompiled
+        # them all with Janino and the JIT compiled them again.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -844,3 +844,51 @@ def test_jsonl_dir_reader_requires_schema(spark, tmp_path):
         spark.read.format("jsonl_dir").option(
             "path", str(tmp_path)
         ).load().collect()
+
+
+def test_events_footer_read_once_per_file_version(spark, tmp_path):
+    """The events read infers its at-rest schema from the parquet footer
+    once per (path, size, mtime): a warm call launches no Spark job, and
+    rewriting the file in another ts unit is read with the new footer."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_integration_and_visualization_uc3m_spark.sources.readers import load_table
+
+    sc = spark.sparkContext
+    load_table(spark, SF, "events")
+    sc.setJobGroup("events_warm_read", "warm events load_table")
+    try:
+        load_table(spark, SF, "events")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("events_warm_read")) == []
+
+    stamps = [
+        datetime.datetime(2024, 1, 1, 0, 0, 7, 179575),
+        datetime.datetime(2024, 6, 30, 23, 59, 59, 999999),
+    ]
+
+    def write(unit):
+        table = pa.table({
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(stamps, pa.timestamp("us")).cast(pa.timestamp(unit)),
+            "user_id": pa.array([10, 20], pa.int64()),
+            "event_type": pa.array(["view", "click"]),
+            "value": pa.array([1.5, 2.5]),
+            "props": pa.array(["{}", "{}"]),
+        })
+        pq.write_table(table, str(tmp_path / "events.parquet"), coerce_timestamps=None)
+        assert pq.read_schema(str(tmp_path / "events.parquet")).field("ts").type.unit == unit
+
+    def read_ts():
+        rows = load_table(spark, str(tmp_path), "events").collect()
+        return sorted((r.event_id, r.ts) for r in rows)
+
+    write("ns")
+    nanos = read_ts()
+    write("us")
+    assert read_ts() == nanos == [(1, stamps[0]), (2, stamps[1])]
