@@ -63,25 +63,6 @@ def code_length_violations(df: DataFrame, col: str, length: int) -> DataFrame:
     return df.filter(c.isNull() | (F.length(c) != length))
 
 
-def check_all(
-    df: DataFrame,
-    *,
-    not_null: list[str] | None = None,
-    unique: list[str] | None = None,
-    ranges: list[Column] | None = None,
-) -> dict[str, DataFrame]:
-    """Bundle of lazy violation sets for one table — the engine-side
-    equivalent of the reference's DDL block per table."""
-    out: dict[str, DataFrame] = {}
-    if not_null:
-        out["not_null"] = not_null_violations(df, not_null)
-    if unique:
-        out["unique"] = uniqueness_violations(df, unique)
-    for i, pred in enumerate(ranges or []):
-        out[f"range_{i}"] = range_violations(df, pred)
-    return out
-
-
 def expectation_report(
     df: DataFrame,
     row_rules: dict[str, Column],

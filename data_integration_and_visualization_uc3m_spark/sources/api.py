@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import RAW_POPULATION
+from .readers import local_frame
 
 
 class IngestError(RuntimeError):
@@ -80,12 +81,8 @@ def ingest_indicator_per_year(
                 all_rows.append(r)
     except IngestError:
         all_rows = []
-    if not all_rows:
-        return spark.createDataFrame([], schema)
-    # project to declared schema fields (sources may carry extras)
-    names = schema.fieldNames()
-    cleaned = [{k: r.get(k) for k in names} for r in all_rows]
-    return spark.createDataFrame(cleaned, schema)
+    # local_frame projects to the declared fields (sources carry extras)
+    return local_frame(spark, all_rows, schema)
 
 
 def ingest_country_metadata(
@@ -117,11 +114,7 @@ def ingest_country_metadata(
             ),
         ]
     )
-    cleaned = [
-        {"id": r.get("id"), "name": r.get("name"), "region": r.get("region")}
-        for r in rows
-    ]
-    countries = spark.createDataFrame(cleaned, schema)
+    countries = local_frame(spark, rows, schema)
     aggregates = (
         countries.filter(F.col("region.value") == "Aggregates")
         .select(F.col("id").alias("code"))

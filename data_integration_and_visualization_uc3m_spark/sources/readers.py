@@ -165,11 +165,44 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def empty(spark: SparkSession, schema: T.StructType) -> DataFrame:
-    """S3 — the all-or-nothing ingest fallback: an empty DataFrame with
-    the declared schema (reference resets accumulated rows to [] on any
-    request failure, ``crime_immigration_etl.py:128-130``)."""
-    return spark.createDataFrame([], schema)
+def local_frame(
+    spark: SparkSession, rows: list[dict], schema: T.StructType
+) -> DataFrame:
+    """Driver-held rows (API pages, small lookups) as an Arrow-built
+    local relation. ``createDataFrame(list)`` plans a ``Scan
+    ExistingRDD`` over a Python RDD, so every job that reads the frame
+    unpickles its rows in Python workers again (about 1 CPU-s per job
+    for the 1,019-row World Bank frame); an Arrow table plans as
+    ``LocalTableScan`` and runs no Python at execution time.
+
+    ``rows`` are dicts keyed by field name; keys outside ``schema`` are
+    dropped. JSON leaves are untyped, so each string leaf gets the
+    string the row path gives: ``None`` and ``str`` unchanged, ``bool``
+    → ``"true"``/``"false"``, any other scalar → ``str(v)``. A struct
+    value must be a dict or ``None``. No rows give the empty frame with
+    the declared schema, the S3 all-or-nothing ingest fallback
+    (``crime_immigration_etl.py:128-130``)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(
+        [_conform(r, schema) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _conform(value, dtype: T.DataType):
+    if value is None:
+        return None
+    if isinstance(dtype, T.StructType):
+        if not isinstance(value, dict):
+            raise TypeError(
+                f"{dtype.simpleString()} needs a dict, got {type(value).__name__}"
+            )
+        return {f.name: _conform(value.get(f.name), f.dataType) for f in dtype.fields}
+    if isinstance(dtype, T.StringType) and not isinstance(value, str):
+        return ("true" if value else "false") if isinstance(value, bool) else str(value)
+    return value
 
 
 def year_dim(spark: SparkSession, start: int = 2018, end: int = 2023) -> DataFrame:

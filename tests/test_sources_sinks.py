@@ -62,6 +62,44 @@ def test_ingest_country_metadata_aggregates_table(spark):
     assert [r.code for r in aggregates.collect()] == ["WLD"]
 
 
+def test_ingest_frames_are_local_relations_with_row_path_values(spark):
+    """The World Bank frames equal what createDataFrame(list) builds from
+    the same JSON (number, bool and NULL leaves stringified alike, extra
+    keys dropped, NULL structs and leaves kept), and plan as local
+    relations: no Python RDD scan re-runs on every job."""
+    from data_integration_and_visualization_uc3m_spark.plans import star
+
+    values = ["46000000", 47351567, 4.7e7, 1e-5, True, None, "n/a"]
+    page = [dict(wb_row("ESP", "Spain", v), extra=i) for i, v in enumerate(values)]
+    page += [
+        {"countryiso3code": "FRA", "country": None, "value": 1},
+        {"countryiso3code": "ITA", "country": {"id": None, "value": "Italy", "x": 1},
+         "value": 2.5},
+    ]
+    df = api.ingest_indicator_per_year(spark, lambda url: [{}, page], "u/{year}", [2019])
+    expected = spark.createDataFrame(
+        [dict(r, year_id=2019) for r in page], api.RAW_POPULATION)
+    assert df.schema == api.RAW_POPULATION
+    assert df.collect() == expected.collect()
+    assert [r.value for r in df.collect()][:7] == [
+        "46000000", "47351567", "47000000.0", "1e-05", "true", None, "n/a"]
+
+    meta = [{}, [{"id": "ESP", "name": "Spain", "iso2Code": "ES",
+                  "region": {"id": "ECS", "value": "Europe", "iso2code": "Z7"}},
+                 {"id": "WLD", "name": "World", "region": None}]]
+    countries, aggregates = api.ingest_country_metadata(spark, lambda u: meta, "u")
+    assert [tuple(r) for r in countries.collect()] == [
+        ("ESP", "Spain", ("ECS", "Europe")), ("WLD", "World", None)]
+    with pytest.raises(TypeError):
+        api.ingest_country_metadata(
+            spark, lambda u: [{}, [{"id": "ESP", "region": "Europe"}]], "u")
+
+    for frame in (df, countries, aggregates, star.iso2_lookup(spark)):
+        frame.count()
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan and "LocalTableScan" in plan, plan
+
+
 def test_fetch_paginated_stops_on_empty(spark):
     pages = {"p/1": [{}, [{"a": 1}]], "p/2": [{}, [{"a": 2}]], "p/3": [{}, []]}
     got = api.fetch_paginated(lambda u: pages[u], "p/{page}", range(1, 10))

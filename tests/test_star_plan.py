@@ -104,3 +104,69 @@ def test_validate_and_idempotent_load(spark):
         a = sorted(map(tuple, loaded_once[name].collect()))
         b = sorted(map(tuple, loaded_twice[name].collect()))
         assert a == b, f"{name} not idempotent"
+
+
+def _reference_report(tables):
+    """validate_star's counters from the per-violation operators."""
+    from data_integration_and_visualization_uc3m_spark.operators import validate
+    from data_integration_and_visualization_uc3m_spark.schemas import NATURAL_KEYS
+
+    want = {}
+    for name, keys in NATURAL_KEYS.items():
+        if name in tables:
+            want[f"{name}_dup_keys"] = validate.uniqueness_violations(
+                tables[name], keys).count()
+    for fact in ("population", "crime", "immigration"):
+        for dim, key in (("country", "country_iso3_id"), ("year", "year_id")):
+            if fact in tables and dim in tables:
+                want[f"{fact}_fk_{dim}"] = validate.fk_violations(
+                    tables[fact], tables[dim].select(key), [key]).count()
+    return want
+
+
+def test_validate_star_exact_and_one_query(spark):
+    """Adversarial star: duplicate and NULL natural keys, orphan and
+    NULL FKs, a dimension holding a NULL key and duplicate rows, and
+    empty dimensions. validate_star equals the per-violation operators
+    on every table subset, in a small fixed number of Spark jobs."""
+    fact = "{} double, country_iso3_id string, year_id int"
+    country = spark.createDataFrame(
+        [("ESP", "spain"), ("FRA", "france"), ("FRA", "france2"),
+         (None, "n1"), (None, "n2"), ("DEU", "germany")],
+        "country_iso3_id string, country_name string")
+    year = spark.createDataFrame([(2018,), (2019,), (2019,), (None,)], "year_id int")
+    population = spark.createDataFrame(
+        [(1, "ESP", 2018), (2, "ESP", 2018), (3, "XXX", 2019), (4, None, 2019),
+         (5, None, 2019), (6, "FRA", None), (7, "FRA", 2030), (8, "DEU", 2019)],
+        "population long, country_iso3_id string, year_id int")
+    crime = spark.createDataFrame(
+        [(1.0, "ESP", 2018), (2.0, "QQQ", 2031), (3.0, None, None), (4.0, None, None)],
+        fact.format("convicts_per_100000"))
+    immigration = spark.createDataFrame(
+        [(1.0, "DEU", 2019), (2.0, "DEU", 2019), (3.0, "GRC", 2018),
+         (4.0, "ESP", 2031)],
+        fact.format("immigration_per_100000"))
+    tables = {"country": country, "year": year, "population": population,
+              "crime": crime, "immigration": immigration}
+    subsets = [
+        tables,
+        {t: tables[t] for t in ("population", "crime", "immigration")},
+        {"country": country, "population": population},
+        {"year": year, "immigration": immigration},
+        {"country": country.limit(0), "year": year.limit(0), "crime": crime},
+    ]
+    sc = spark.sparkContext
+    reports = []
+    for i, sub in enumerate(subsets):
+        group = f"validate_star_{i}"
+        sc.setJobGroup(group, "validate_star")
+        try:
+            got = star.validate_star(sub)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert got == _reference_report(sub), sorted(sub)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4, sorted(sub)
+        reports.append(got)
+    # every counter of the full star is a real violation, not a vacuous 0
+    assert len(reports[0]) == 11 and all(reports[0].values()), reports[0]
