@@ -379,84 +379,6 @@ def jaccard_pairs_df_capped(
     )
 
 
-def prefix_filter_jaccard_pairs(
-    sets_df: DataFrame,
-    id_col: str = "doc_id",
-    item_col: str = "shingle",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact Jaccard pairs via PREFIX FILTERING (All-Pairs / PPJoin
-    family, Bayardo et al. 2007) — the third candidate-generation
-    strategy next to the df-cap and MinHash-LSH: sort each set by a
-    GLOBAL rarest-first order (document frequency, then item) and emit
-    only the first ``|X| − ⌈t·|X|⌉ + 1`` items as candidate keys.
-    Completeness: J(A,B) ≥ t ⇒ |A∩B| ≥ ⌈t·max(|A|,|B|)⌉, and two sets
-    sharing ≥ α elements under a global order must collide within
-    their ``|X| − α + 1`` prefixes — so no qualifying pair is missed,
-    and the exact verify step removes every false positive. Output
-    contract identical to ``jaccard_pairs`` (same final answer,
-    sub-quadratic candidate volume).
-
-    Scale: candidate keys are the RAREST tokens of each set — hot
-    (stop) shingles land at the end of the order and never become join
-    keys, which is the same Σdf² containment the df cap buys, but
-    with zero false negatives and no tuning knob. One extra shuffle vs
-    ``jaccard_pairs`` (the df join + per-doc window) buys a candidate
-    relation bounded by rare-token collisions only.
-
-    MEASURED on the driver's synthetic corpus (31-word vocabulary, so
-    even "rare" shingles have df in the hundreds): 7.0 s vs 2.3 s for
-    the plain grouped pair-explode at sf0.1, t=0.5 (5.8 s at t=0.7) —
-    the prefix relation stays hot and the extra shuffles don't pay,
-    which is why this operator is NOT on the query roster here. On a
-    realistic Zipfian vocabulary at high thresholds the prefix
-    relation is tiny and this is the standard exact set-similarity
-    join (the unit test proves pair-set equality either way).
-    """
-    dfreq = sets_df.groupBy(item_col).agg(F.count(F.lit(1)).alias("_df"))
-    sizes = sets_df.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
-    w = Window.partitionBy(id_col).orderBy(F.col("_df"), F.col(item_col))
-    prefix = (
-        sets_df.join(dfreq, item_col)
-        .withColumn("_rk", F.row_number().over(w))
-        .join(sizes, id_col)
-        .filter(
-            F.col("_rk")
-            <= F.col("set_size")
-            - F.ceil(F.lit(float(threshold)) * F.col("set_size"))
-            + 1
-        )
-        .select(id_col, item_col)
-    )
-    # pair-explode the prefix relation (same grouped construction as
-    # _pair_intersections), then exact-verify on the FULL sets
-    cands = (
-        _pair_intersections(prefix, id_col, item_col)
-        .select("id_a", "id_b")
-    )
-    ta = sets_df.select(F.col(id_col).alias("id_a"), item_col)
-    tb = sets_df.select(F.col(id_col).alias("id_b"), item_col)
-    inter = (
-        cands.join(ta, "id_a")
-        .join(tb, ["id_b", item_col])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("set_size").alias("size_b"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common")
-            / (F.col("size_a") + F.col("size_b") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "n_common", "size_a", "size_b", "jaccard")
-    )
-
-
 def jaccard_pairs(
     sets_df: DataFrame,
     id_col: str = "doc_id",

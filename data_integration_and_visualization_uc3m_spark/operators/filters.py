@@ -18,16 +18,10 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def not_in_literal(col: Column | str, values: Iterable) -> Column:
-    """F1 — negated membership vs a literal list (drop World Bank
-    "Aggregates" pseudo-countries, ``crime_immigration_etl.py:157-159``).
-    For data-driven exclusion lists, prefer :func:`anti_join_exclude`."""
-    return ~_c(col).isin(list(values))
-
-
 def anti_join_exclude(df: DataFrame, exclude: DataFrame, on: str) -> DataFrame:
-    """F1 at scale — exclusion list as a table (it is data-driven in the
-    reference, fetched at runtime ``crime_immigration_etl.py:98-102``).
+    """F1 — exclusion list as a table (drop World Bank "Aggregates"
+    pseudo-countries, ``crime_immigration_etl.py:157-159``; the list is
+    data-driven in the reference, fetched at runtime at ``:98-102``).
     left_anti keeps rows with no match; Catalyst broadcasts the small side."""
     return df.join(F.broadcast(exclude), on=on, how="left_anti")
 

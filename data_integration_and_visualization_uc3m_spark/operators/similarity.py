@@ -1,8 +1,10 @@
 """Similarity search over embedding columns (north-star extension).
 
-Brute-force cosine top-k is the correctness baseline; signed-random-
-projection LSH bucketing is the scale path (restricts candidates to one
-bucket before the exact re-rank — the classic Charikar construction).
+Brute-force cosine top-k (``cosine_topk_rel``) is the correctness
+baseline; signed-random-projection LSH bucketing (``lsh_bucket``) and
+the IVF coarse quantizer (``ivf_topk_rel``) are the scale paths
+(restrict candidates to a bucket or cell before the exact re-rank —
+the classic Charikar construction for LSH).
 
 Determinism design (oracle-portable):
 - all dot products fold left-to-right in DOUBLE (Spark ``F.aggregate``
@@ -35,41 +37,9 @@ def _dot(a, b):
     )
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding", out: str = "norm") -> DataFrame:
-    v = F.col(vec_col)
-    return df.withColumn(out, F.sqrt(_dot(v, v)))
-
-
-def cosine_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Brute-force cosine top-k against a literal query vector.
-
-    One scan, no shuffle until the final TakeOrdered(k). The query
-    vector is a literal array in the plan (broadcast-equivalent).
-    """
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    v = F.col(vec_col)
-    cos = _dot(v, q) / (F.sqrt(_dot(v, v)) * F.sqrt(_dot(q, q)))
-    return (
-        df.select(F.col(id_col), cos.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def rademacher_component(plane: int, dim_col) -> F.Column:
-    """±1 pseudo-random component for (plane, dim), via md5 hex parity —
-    engine-portable replacement for a seeded Gaussian."""
-    return rademacher_component_col(F.lit(plane), dim_col)
-
-
 def rademacher_component_col(plane_col, dim_col) -> F.Column:
-    """Column-typed twin of :func:`rademacher_component` — integer
+    """±1 pseudo-random component for (plane, dim), via md5 hex parity
+    — an engine-portable replacement for a seeded Gaussian. Integer
     columns render through concat_ws exactly like integer literals, so
     the md5 strings (and the ±1 parities every SQL oracle re-derives)
     are identical."""
@@ -96,7 +66,7 @@ def lsh_bucket(
     neighboring buckets (Hamming-1 bucket ids).
 
     The ±1 plane components are md5-parity pseudo-randoms — the
-    engine-portable seeded-Gaussian replacement (rademacher_component)
+    engine-portable seeded-Gaussian replacement (rademacher_component_col)
     — but they are CONSTANT per (plane, dim): deriving them inside the
     per-row fold re-evaluated n_planes·dim md5 calls on EVERY row
     (measured 9.7 s for 12 planes over 2,000 rows — the md5s, not the
@@ -301,30 +271,6 @@ def ivf_topk(
         .orderBy(F.col("cosine").desc(), F.col(id_col))
         .limit(k)
     )
-
-
-def lsh_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    n_planes: int = 8,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN query: bucket the corpus, keep the query's bucket, exact
-    cosine re-rank inside it. Recall < 1 by construction (single-probe);
-    the oracle checks the computation, the bench checks the win."""
-    bucketed = lsh_bucket(df, n_planes, id_col, vec_col)
-    qdf = lsh_bucket(
-        df.sparkSession.createDataFrame(
-            [(0, [float(x) for x in query_vec])], f"{id_col} long, {vec_col} array<float>"
-        ),
-        n_planes,
-        id_col,
-        vec_col,
-    ).select(F.col("bucket").alias("qbucket"))
-    cand = bucketed.join(F.broadcast(qdf), F.col("bucket") == F.col("qbucket"))
-    return cosine_topk(cand, query_vec, k, id_col, vec_col)
 
 
 def quantize_embeddings(
@@ -582,36 +528,6 @@ def pq_adc_topk(
     )
 
 
-def l2_topk_nano(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact L2 top-k in nano fixed point — the ground truth the PQ/ADC
-    recall report compares against (same metric, full precision). One
-    scan + TakeOrdered; the squared distance folds left-to-right in
-    double before the single floor, so both engines agree bit-for-bit."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    v = F.col(vec_col)
-    d2 = F.aggregate(
-        F.zip_with(
-            v, q, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)
-        ),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
-    return (
-        df.select(
-            F.col(id_col),
-            F.floor(d2 * F.lit(NANO)).cast("long").alias("dist_nano"),
-        )
-        .orderBy(F.col("dist_nano"), F.col(id_col))
-        .limit(k)
-    )
-
-
 # ---------------------------------------------------------------------
 # Relation-form codebooks: the coarse quantizer as a DataFrame instead
 # of a driver-collected Python literal. Training is one Lloyd
@@ -631,7 +547,7 @@ def l2_topk_nano(
 
 def _l2_nano(a, b) -> F.Column:
     """floor(1e9 · Σ(a−b)²) with a left-to-right double fold — the
-    single-floor distance convention shared with l2_topk_nano and the
+    single-floor distance convention shared with l2_topk_rel and the
     DuckDB ``list_sum(list_transform(...))`` twin."""
     return F.floor(
         F.aggregate(
@@ -877,7 +793,11 @@ def l2_topk_rel(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """l2_topk_nano with the query as a 1-row broadcast relation."""
+    """Exact L2 top-k in nano fixed point against a 1-row broadcast
+    query relation — the ground truth the PQ/ADC recall report compares
+    against (same metric, full precision). The squared distance folds
+    left-to-right in double before the single floor, so both engines
+    agree bit-for-bit."""
     q1 = qdf.select(F.col(vec_col).alias("_qv"))
     return (
         df.crossJoin(F.broadcast(q1))
@@ -897,7 +817,8 @@ def cosine_topk_rel(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """cosine_topk with the query as a 1-row broadcast relation; the
+    """Brute-force cosine top-k against a 1-row broadcast query
+    relation: one scan, no shuffle until the final TakeOrdered(k). The
     query norm is computed ONCE on the broadcast side (constant per
     query — the ann_int8_topk lesson).
 

@@ -981,10 +981,10 @@ def feature_hash_embedding(
     and no driver state.
 
     Determinism/portability: bucket and sign come from md5 hex-char
-    parities (the rademacher_component construction — identical in any
-    engine with md5), components are exact integer sums, and the
-    squared L2 norm is an exact integer. ``dim`` must be a power of
-    two ≤ 2^14 (parity bits are drawn per hex char).
+    parities (the similarity.rademacher_component_col construction —
+    identical in any engine with md5), components are exact integer
+    sums, and the squared L2 norm is an exact integer. ``dim`` must be
+    a power of two ≤ 2^14 (parity bits are drawn per hex char).
 
     Scale shape: one token explode → one (id, bucket) aggregation →
     one per-document map assembly. No vocabulary relation, no

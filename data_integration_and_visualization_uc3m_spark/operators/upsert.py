@@ -215,30 +215,45 @@ def _next_snapshot_name(root: str) -> str:
     return f"v-{seq:08d}-{uuid.uuid4().hex[:12]}"
 
 
-def _commit_manifest(root: str, new_name: str, expect: str | None = ...) -> str:
+def _write_manifest(root: str, history: list[str]) -> None:
+    """Atomically replace the manifest with ``history`` (live last):
+    write a temp file, then ``os.replace`` it over the manifest."""
+    tmp = os.path.join(root, f"{_MANIFEST}.tmp-{uuid.uuid4().hex[:8]}")
+    with open(tmp, "w") as fh:
+        fh.write("\n".join(history) + "\n")
+    os.replace(tmp, os.path.join(root, _MANIFEST))  # the atomic commit point
+
+
+def _commit_manifest(root: str, new_name: str, expect: str | None) -> str:
     """Atomically append ``new_name`` to the commit history and make it
-    live (write-temp + ``os.replace`` of the whole manifest). With
-    ``expect`` set (a snapshot name or None for "empty table"), the
-    flip is OPTIMISTICALLY GUARDED: if another writer committed since
-    the caller read ``expect``, raise instead of silently overwriting
-    their snapshot (the new dir is left as an orphan for GC). The
-    check-then-replace window is not a true CAS — single-writer-per-
-    table remains the concurrency contract (as for any filesystem
-    table format without a lock service) — but the guard shrinks the
-    lost-update window from the full rewrite duration to microseconds."""
+    live. The flip is OPTIMISTICALLY GUARDED on ``expect`` (the live
+    snapshot name the caller read, or None for "empty table"): if
+    another writer committed since, raise instead of silently
+    overwriting their snapshot (the new dir is left as an orphan for
+    GC). The check-then-replace window is not a true CAS — single-
+    writer-per-table remains the concurrency contract (as for any
+    filesystem table format without a lock service) — but the guard
+    shrinks the lost-update window from the full rewrite duration to
+    microseconds."""
     history = _read_history(root)
     cur = history[-1] if history else None
-    if expect is not ... and cur != expect:
+    if cur != expect:
         raise RuntimeError(
             f"concurrent commit detected under {root}: expected manifest "
             f"{expect!r}, found {cur!r}; aborting flip "
             f"(orphan snapshot {new_name} left for GC)"
         )
-    tmp = os.path.join(root, f"{_MANIFEST}.tmp-{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as fh:
-        fh.write("\n".join([*history, new_name]) + "\n")
-    os.replace(tmp, os.path.join(root, _MANIFEST))  # the atomic commit point
+    _write_manifest(root, [*history, new_name])
     return new_name
+
+
+def _commit_snapshot(root: str, df: DataFrame, expect: str | None) -> str:
+    """Write ``df`` to a fresh snapshot dir, then flip the manifest to
+    it guarded on ``expect`` (step 1 + step 2 of the protocol above).
+    Returns the committed snapshot name."""
+    new_name = _next_snapshot_name(root)
+    df.write.mode("overwrite").parquet(os.path.join(root, new_name))
+    return _commit_manifest(root, new_name, expect)
 
 
 def current_snapshot(root: str) -> str | None:
@@ -247,12 +262,17 @@ def current_snapshot(root: str) -> str | None:
     return history[-1] if history else None
 
 
-def read_upsert_parquet(spark: SparkSession, root: str) -> DataFrame:
-    """Read the live snapshot of a versioned upsert table."""
+def _live_snapshot(root: str) -> str:
+    """Name of the live snapshot dir; raises if the table is empty."""
     name = current_snapshot(root)
     if name is None:
         raise FileNotFoundError(f"no committed snapshot under {root}")
-    return spark.read.parquet(os.path.join(root, name))
+    return name
+
+
+def read_upsert_parquet(spark: SparkSession, root: str) -> DataFrame:
+    """Read the live snapshot of a versioned upsert table."""
+    return spark.read.parquet(os.path.join(root, _live_snapshot(root)))
 
 
 def write_upsert_parquet(
@@ -277,9 +297,7 @@ def write_upsert_parquet(
         target = spark.read.parquet(os.path.join(root, cur))
         merge = upsert_ignore if mode == "ignore" else upsert_replace
         merged = merge(target, batch, keys, order_by)
-    new_name = _next_snapshot_name(root)
-    merged.write.mode("overwrite").parquet(os.path.join(root, new_name))
-    return _commit_manifest(root, new_name, expect=cur)
+    return _commit_snapshot(root, merged, expect=cur)
 
 
 def delete_keys_parquet(
@@ -296,16 +314,12 @@ def delete_keys_parquet(
     forgets), and a crash mid-delete cannot tear the table. Idempotent:
     re-deleting the same keys commits an identical snapshot."""
     spark = tombstones.sparkSession
-    cur = current_snapshot(root)
-    if cur is None:
-        raise FileNotFoundError(f"no committed snapshot under {root}")
+    cur = _live_snapshot(root)
     target = spark.read.parquet(os.path.join(root, cur))
     remaining = target.join(
         F.broadcast(tombstones.select(*keys).distinct()), keys, "left_anti"
     )
-    new_name = _next_snapshot_name(root)
-    remaining.write.mode("overwrite").parquet(os.path.join(root, new_name))
-    return _commit_manifest(root, new_name, expect=cur)
+    return _commit_snapshot(root, remaining, expect=cur)
 
 
 def compact_snapshot(
@@ -329,9 +343,7 @@ def compact_snapshot(
     (driver-side dir listing — metadata only, no data read). coalesce()
     avoids a shuffle: compaction only narrows partitioning.
     """
-    cur = current_snapshot(root)
-    if cur is None:
-        raise FileNotFoundError(f"no committed snapshot under {root}")
+    cur = _live_snapshot(root)
     src = os.path.join(root, cur)
     nbytes = sum(
         os.path.getsize(os.path.join(dirpath, f))
@@ -341,11 +353,9 @@ def compact_snapshot(
     )
     n_files = max(1, -(-nbytes // target_bytes))  # ceil
     df = spark.read.parquet(src).coalesce(n_files)
-    new_name = _next_snapshot_name(root)
-    df.write.mode("overwrite").parquet(os.path.join(root, new_name))
     # expect=cur: if an upsert committed while we rewrote, abort the
     # flip instead of silently dropping its rows from the live table
-    return _commit_manifest(root, new_name, expect=cur)
+    return _commit_snapshot(root, df, expect=cur)
 
 
 def vacuum(root: str, keep_last: int = 3) -> list[str]:
@@ -399,11 +409,7 @@ def vacuum(root: str, keep_last: int = 3) -> list[str]:
     if any(name in committed for name in deleted):
         # prune reclaimed versions from the history (atomic rewrite,
         # live last — same commit point as a flip)
-        survivors = [n for n in history if n not in set(deleted)]
-        tmp = os.path.join(root, f"{_MANIFEST}.tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as fh:
-            fh.write("\n".join(survivors) + "\n")
-        os.replace(tmp, os.path.join(root, _MANIFEST))
+        _write_manifest(root, [n for n in history if n not in set(deleted)])
     return deleted
 
 

@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 
 from ..functions import iso3166
 from ..operators import cleaning, filters, joins, upsert
-from ..schemas import FOREIGN_KEYS, LOAD_ORDER, NATURAL_KEYS
+from ..schemas import FOREIGN_KEYS, LOAD_ORDER, NATURAL_KEYS, YEARS
 from ..sources.readers import local_frame
 
 # ISO2 → ISO3 lookup over the FULL ISO 3166-1 universe (the pycountry
@@ -33,9 +33,6 @@ ISO2_TO_ISO3 = {a2: a3 for a2, a3, _, _ in iso3166.COUNTRIES}
 ISO2_TO_ISO3.update(
     {alias.upper(): a3 for alias, a3 in iso3166.EXTRA_ALIASES}
 )
-
-MIN_YEAR, MAX_YEAR = 2018, 2022
-
 
 ISO2_LOOKUP = T.StructType(
     [T.StructField("alias", T.StringType()), T.StructField("canonical", T.StringType())]
@@ -64,7 +61,7 @@ def transform_country_and_population(
     - nested country.value non-null (etl:171-174) — struct access
     - name = lower∘trim, alias-lookup with fallback (etl:31-34,177-179)
     - population = coerce(value) > 0, rounded to long (etl:182-192)
-    - year_id int ≥ 2018 (etl:195-196)
+    - year_id int ≥ the first of ``schemas.YEARS`` (etl:195-196)
     - country dim = first-wins dedup on iso3, ordered by (name, year)
       for determinism (etl:199-203 keeps pandas file order; SURVEY §7.4.3)
     """
@@ -83,7 +80,7 @@ def transform_country_and_population(
     df = df.filter(filters.in_range("population_raw", low=None) & (F.col("population_raw") > 0))
     df = df.withColumn("population", cleaning.to_integer_rounded("population_raw", "long"))
     df = df.withColumn("year_id", F.col("year_id").cast("int")).filter(
-        F.col("year_id") >= MIN_YEAR
+        F.col("year_id") >= YEARS[0]
     )
     df = df.withColumnRenamed("countryiso3code", "country_iso3_id")
 
@@ -119,7 +116,7 @@ def transform_crime(raw_crime: DataFrame) -> DataFrame:
             F.col("Indicator") == "Persons convicted",
             F.col("Age") == "Total",
             F.col("Unit of measurement") == "Rate per 100,000 population",
-            F.col("year_id").cast("int") >= MIN_YEAR,
+            F.col("year_id").cast("int") >= YEARS[0],
             F.col("Region") == "Europe",
         ],
     )
@@ -225,24 +222,6 @@ def validate_star(tables: dict[str, DataFrame]) -> dict[str, int]:
     return {k: int(v) for k, v in row.asDict().items()}
 
 
-def load_star(
-    existing: dict[str, DataFrame], incoming: dict[str, DataFrame]
-) -> dict[str, DataFrame]:
-    """K2/K4 — FK-ordered idempotent load: upsert each table in
-    LOAD_ORDER with conflict-ignore semantics (etl:335-380)."""
-    out = dict(existing)
-    for name in LOAD_ORDER:
-        if name not in incoming:
-            continue
-        batch = incoming[name]
-        keys = NATURAL_KEYS[name]
-        if name in out:
-            out[name] = upsert.upsert_ignore(out[name], batch, keys)
-        else:
-            out[name] = upsert.dedup_batch_first_wins(batch, keys)
-    return out
-
-
 def ddl_statements() -> list[str]:
     """The reference warehouse DDL (``database/initdb/schema.sql:23-117``)
     re-emitted in embedded-ANSI dialect (Derby-compatible): dimension
@@ -251,8 +230,8 @@ def ddl_statements() -> list[str]:
     both FOREIGN KEYs per fact with ON DELETE CASCADE
     (schema.sql:44-54,68-78,91-101), the per-fact UNIQUE
     (country, year) natural key (schema.sql:57,81,104), and the seeded
-    year dimension 2018-2022 (schema.sql:111-117). Statement order is
-    LOAD_ORDER-safe: dims before facts.
+    year dimension ``schemas.YEARS`` (schema.sql:111-117). Statement
+    order is LOAD_ORDER-safe: dims before facts.
 
     Executed live against embedded Derby in the warehouse e2e test —
     the constraints these statements declare are the same surface
@@ -282,6 +261,6 @@ def ddl_statements() -> list[str]:
         fact.format(
             name="immigration", measure="immigration_per_100000 NUMERIC(10, 2)"
         ),
-        'INSERT INTO "year" (year_id) '
-        "VALUES (2018), (2019), (2020), (2021), (2022)",
+        'INSERT INTO "year" (year_id) VALUES '
+        + ", ".join(f"({y})" for y in YEARS),
     ]

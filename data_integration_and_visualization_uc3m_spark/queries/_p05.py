@@ -367,7 +367,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@10 of PQ/ADC against exact L2 ground truth (same metric,
-    full precision — operators/similarity.py:l2_topk_nano), completing
+    full precision — operators/similarity.py:l2_topk_rel), completing
     the measured-recall family (IVF, int8, PQ). The deliberately tiny
     4-centroid codebook makes the quantization loss VISIBLE: the
     report documents the trade, not a vacuous 100%. Codebook and query

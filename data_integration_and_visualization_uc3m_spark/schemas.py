@@ -75,6 +75,10 @@ FOREIGN_KEYS = {
 }
 LOAD_ORDER = ["country", "year", "population", "crime", "immigration"]
 
+# The year dimension (schema.sql:111-117 seeds 2018-2022); the star
+# facts keep rows from its first year on (etl:195-196, :242).
+YEARS = range(2018, 2023)
+
 # --- Ingest shapes (reference raw inputs) ---------------------------------
 
 # World Bank indicator rows (crime_immigration_etl.py:104-132): one nested
@@ -228,5 +232,3 @@ TESTDATA = {
         ]
     ),
 }
-
-TESTDATA_TABLES = list(TESTDATA)

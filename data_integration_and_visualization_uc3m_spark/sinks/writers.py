@@ -17,7 +17,7 @@ Spark-side:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -121,40 +121,6 @@ def write_partitioned_sorted(
         .partitionBy(*partition_by)
         .parquet(path)
     )
-
-
-def audited_write_parquet(
-    df: DataFrame,
-    path: str,
-    metrics: dict[str, Column] | None = None,
-    partition_by: list[str] | None = None,
-) -> dict:
-    """Snapshot write with SINGLE-PASS audit metrics via Spark's
-    ``Observation`` API: the metric aggregates (row counts, null
-    counts, sums, min/max) are folded into the write scan itself, so
-    validating a load costs ZERO extra passes — at 100 TB a
-    count-after-write is a second full scan, which is why warehouse
-    loaders ship audit columns with the job instead.
-
-    ``metrics`` maps metric name → aggregate Column evaluated over the
-    written rows (default: row count only). Returns the observed dict
-    after the write completes. The metrics are exact — they observe
-    every row the writer consumed, under whatever partitioning the
-    write used (unlike accumulators, Observation dedups task retries).
-    """
-    from pyspark.sql import Observation
-
-    if metrics is None:
-        metrics = {"n_rows": F.count(F.lit(1))}
-    names = list(metrics)
-    obs = Observation()
-    observed = df.observe(obs, *[metrics[n].alias(n) for n in names])
-    w = observed.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-    got = obs.get
-    return {n: got[n] for n in names}
 
 
 # Microsecond-precision ISO-8601 for JSON-lines interchange. Spark's

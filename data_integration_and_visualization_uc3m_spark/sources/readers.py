@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schemas import TESTDATA, TESTDATA_TABLES
+from ..schemas import TESTDATA, YEARS
 
 # Small-scan re-spread bounds: a parquet file is splittable only at
 # row-group boundaries, so a small single-file table scans as ONE task
@@ -118,16 +118,6 @@ def load_table(
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:
     """Schema-evolution-tolerant parquet read: ``mergeSchema`` unions
     the schemas of all files, so rows written before a column existed
@@ -146,15 +136,6 @@ def read_csv(
     ``pandas.read_csv`` at ``crime_immigration_etl.py:144-148``,
     ``map-making/create-maps.py:11``)."""
     return spark.read.schema(schema).csv(path, header=header)
-
-
-def read_json(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """S1-adjacent — JSON-lines scan with a declared schema (the
-    file-at-rest twin of the API ingest; nested structs map 1:1 to
-    StructType, no inference pass)."""
-    return spark.read.schema(schema).json(path)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
@@ -205,10 +186,13 @@ def _conform(value, dtype: T.DataType):
     return value
 
 
-def year_dim(spark: SparkSession, start: int = 2018, end: int = 2023) -> DataFrame:
-    """S7 — static year-dimension seed (``schema.sql:111-117`` seeds
-    2018–2022). ``spark.range`` is a parallel generator, no driver list."""
-    return spark.range(start, end).select(F.col("id").cast("int").alias("year_id"))
+def year_dim(spark: SparkSession) -> DataFrame:
+    """S7 — static year-dimension seed (``schemas.YEARS``,
+    ``schema.sql:111-117``). ``spark.range`` is a parallel generator,
+    no driver list."""
+    return spark.range(YEARS.start, YEARS.stop).select(
+        F.col("id").cast("int").alias("year_id")
+    )
 
 
 def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:

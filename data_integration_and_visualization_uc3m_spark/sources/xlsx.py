@@ -5,15 +5,10 @@ parse → ``spark.createDataFrame`` (Arrow path). The reference reads
 with the real header on spreadsheet row 3 (``header=2``,
 ``crime_immigration_etl.py:136-142``).
 
-Three tiers, fastest-available wins:
-
-1. ``pandas.read_excel`` (openpyxl) when the library is present.
-2. A stdlib fallback — an .xlsx is a zip of XML parts, so
-   ``zipfile`` + ``xml.etree`` parse the worksheet directly (shared
-   strings, inline strings, numbers, booleans). No third-party deps,
-   so S4 always executes.
-3. ``read_xlsx_jvm`` — the spark-excel JVM data source for
-   executor-side distributed reads when the jar is on the classpath.
+One parser: an .xlsx is a zip of XML parts, so ``zipfile`` +
+``xml.etree`` read the worksheet directly (shared strings, inline
+strings, numbers, booleans). No third-party deps, so S4 always
+executes; the frame reaches Spark through pandas + Arrow.
 
 For many/huge XLSX files at scale, distribute by file: parallelize the
 path list and parse per-partition with the stdlib parser (pure-python,
@@ -186,57 +181,19 @@ def read_xlsx(
     schema: T.StructType | None = None,
 ) -> DataFrame:
     """S4 — XLSX scan with header offset (header_row=2 ⇒ spreadsheet
-    row 3, matching pandas ``header=2``; crime_immigration_etl.py:141).
-
-    Prefers pandas+openpyxl when installed; otherwise parses with the
-    stdlib zip+XML fallback so the operator always executes."""
+    row 3, matching pandas ``header=2``; crime_immigration_etl.py:141),
+    parsed by :func:`parse_xlsx_rows`. A ``header_row`` past the last
+    row raises :class:`XlsxUnavailable`."""
     import pandas as pd
 
-    try:
-        import openpyxl  # noqa: F401
-        pdf = pd.read_excel(path, header=header_row)
-    except ImportError:
-        rows = parse_xlsx_rows(path)
-        if header_row >= len(rows):
-            raise XlsxUnavailable(
-                f"header_row={header_row} beyond sheet ({len(rows)} rows)"
-            )
-        header = [str(c) for c in rows[header_row]]
-        pdf = pd.DataFrame(rows[header_row + 1:], columns=header)
-    pdf.columns = [str(c) for c in pdf.columns]
+    rows = parse_xlsx_rows(path)
+    if header_row >= len(rows):
+        raise XlsxUnavailable(
+            f"header_row={header_row} beyond sheet ({len(rows)} rows)"
+        )
+    header = [str(c) for c in rows[header_row]]
+    pdf = pd.DataFrame(rows[header_row + 1:], columns=header)
     if schema is not None:
         pdf = pdf[[f.name for f in schema.fields]]
         return spark.createDataFrame(pdf, schema)
     return spark.createDataFrame(pdf)
-
-
-def read_xlsx_jvm(
-    spark: SparkSession,
-    path: str,
-    header_row: int = 0,
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """S4 at-scale path: the spark-excel (com.crealytics) JVM data
-    source — executor-side reads, no driver bridge, the right choice
-    when there are many/huge workbooks. The jar does NOT ship in this
-    image, so this raises :class:`XlsxUnavailable` here; with the jar
-    on the classpath (``--packages com.crealytics:spark-excel_2.13``)
-    the same call reads distributed. ``dataAddress`` skips the
-    ``header_row`` leading rows (pandas ``header=N`` parity)."""
-    reader = (
-        spark.read.format("com.crealytics.spark.excel")
-        .option("header", "true")
-        .option("dataAddress", f"'Sheet1'!A{header_row + 1}")
-    )
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    try:
-        return reader.load(path)
-    except Exception as ex:  # jar absent → ClassNotFound inside analysis
-        raise XlsxUnavailable(
-            "spark-excel data source not on the classpath; add "
-            "com.crealytics:spark-excel to spark.jars.packages or use "
-            "read_xlsx (driver-side bridge with stdlib fallback)"
-        ) from ex

@@ -8,8 +8,13 @@ test drives both and compares.
 Scale notes:
 - watermark bounds state: late rows beyond 30 min are dropped, so
   state size is O(active windows × event types), not O(stream);
-- ``session_window`` is the streaming twin of the batch lag-gap
+- ``session_window`` (:func:`sessionized_agg`, also the body of the
+  sessionize runner) is the streaming twin of the batch lag-gap
   sessionization (queries.sessionize_events);
+- custom per-user state is one operator,
+  :func:`running_user_totals_exact` on applyInPandasWithState
+  (transformWithStateInPandas needs ``protobuf``, which this engine
+  does not require);
 - sinks: memory (tests), foreachBatch → parquet/upsert (prod), with
   checkpointLocation for exactly-once.
 """
@@ -57,8 +62,13 @@ def hourly_agg(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
 
 def sessionized_agg(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Streaming sessionization via ``session_window`` — the stateful
-    twin of the batch lag-gap version."""
-    src = events.withWatermark("ts", gap) if events.isStreaming else events
+    twin of the batch lag-gap version. On a stream, a watermark the
+    caller already set on ``ts`` is kept; otherwise ``gap`` is the
+    watermark delay."""
+    src = events
+    has_watermark = "spark.watermarkDelayMs" in events.schema["ts"].metadata
+    if events.isStreaming and not has_watermark:
+        src = events.withWatermark("ts", gap)
     return (
         src.groupBy(F.session_window("ts", gap).alias("sess"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -71,58 +81,19 @@ def sessionized_agg(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
-def running_user_totals(events: DataFrame, timeout: str = "NoTimeout") -> DataFrame:
+def running_user_totals_exact(events: DataFrame, timeout: str = "NoTimeout") -> DataFrame:
     """Custom stateful operator via applyInPandasWithState: per-user
     running event count + value total carried across micro-batches.
 
     State is one (count, total) pair per user — O(users), watermark-
-    independent. The GroupState API is the Spark-idiomatic replacement
-    for the reference's nothing (it has no streams) and for hand-rolled
-    accumulators: state lives in the state store (checkpointed,
-    exactly-once under a durable sink).
-    """
-    from pyspark.sql.streaming.state import GroupState
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("total_value", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("total", T.DoubleType()),
-        ]
-    )
-
-    def update(key, pdfs, state: GroupState):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        import pandas as pd
-
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update", timeout
-    )
-
-
-def running_user_totals_exact(events: DataFrame, timeout: str = "NoTimeout") -> DataFrame:
-    """Oracle-checkable variant of :func:`running_user_totals`: the
-    per-user running total accumulates FIXED-POINT micros (int64 of
-    ``floor(value * 1e6)``) instead of floats, so the final state is
-    bit-identical to a batch SQL ``SUM(CAST(FLOOR(value*1000000.0) AS
-    BIGINT))`` regardless of batch boundaries or arrival order — the
-    determinism convention (queries.py header rule 7) applied INSIDE a
-    custom stateful Python operator. Emits cumulative totals per user
-    on every batch; a replace-upsert sink keeps the latest.
+    independent, held in the checkpointed state store. The total
+    accumulates FIXED-POINT micros (int64 of ``floor(value * 1e6)``)
+    instead of floats, so the final state is bit-identical to a batch
+    SQL ``SUM(CAST(FLOOR(value*1000000.0) AS BIGINT))`` regardless of
+    batch boundaries or arrival order — the determinism convention
+    (queries.py header rule 7) applied INSIDE a custom stateful Python
+    operator. Emits cumulative totals per user on every batch; a
+    replace-upsert sink keeps the latest.
     """
     from pyspark.sql.streaming.state import GroupState
 
@@ -195,136 +166,6 @@ def run_stream_stateful_totals(
         q.processAllAvailable()
     finally:
         q.stop()
-
-
-class TransformWithStateUnavailable(ImportError):
-    """transformWithStateInPandas needs the ``protobuf`` package (its
-    state-server protocol is protobuf-framed); raise eagerly with a
-    clear message instead of a mid-stream worker crash."""
-
-
-def _require_tws() -> None:
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - env-dependent
-        raise TransformWithStateUnavailable(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(pip install protobuf); running_user_totals_exact is the "
-            "dependency-free applyInPandasWithState equivalent"
-        ) from exc
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """:func:`running_user_totals_exact` re-expressed on Spark 4's
-    ``transformWithStateInPandas`` — the successor stateful API
-    (typed state handles, timers, TTL, initial-state support; requires
-    the RocksDB state store provider AND the protobuf package — gated
-    by :func:`_require_tws`). Same fixed-point contract: the per-user
-    state is (count, Σ floor(value·1e6)) int64s, so the final emission
-    is bit-identical to batch SQL whatever the batch boundaries.
-    Emits the cumulative row per user per batch."""
-    _require_tws()
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("total_micros", T.LongType()),
-        ]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", "n BIGINT, tot BIGINT"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            import numpy as np
-            import pandas as pd
-
-            n, tot = self._state.get() if self._state.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                tot += int(
-                    np.floor(pdf["value"].to_numpy() * 1e6)
-                    .astype("int64")
-                    .sum()
-                )
-            self._state.update((n, tot))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_micros": [tot],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def run_stream_tws_totals(
-    spark: SparkSession,
-    source_dir: str,
-    target_path: str,
-    checkpoint_dir: str,
-) -> None:
-    """Drive :func:`running_user_totals_tws` over a file stream into the
-    same replace-upsert sink as the applyInPandasWithState runner.
-    transformWithState requires the RocksDB state store — set at
-    RUNTIME (never at session build, per the driver-session contract)
-    and restored afterwards so sibling streams keep their provider."""
-    from ..operators.upsert import write_upsert_parquet
-    from ..session import tune
-
-    tune(spark)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-
-        def sink(batch_df, epoch_id: int) -> None:
-            write_upsert_parquet(
-                target_path, batch_df, ["user_id"], mode="replace"
-            )
-
-        stream = (
-            spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(source_dir)
-        )
-        q = (
-            running_user_totals_tws(stream)
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def sliding_agg(
@@ -630,8 +471,9 @@ def run_stream_sessionized_to_parquet(
     gap: str = "30 minutes",
     watermark: str = "30 days",
 ) -> None:
-    """Streaming sessionization end-to-end: file stream →
-    ``session_window(gap)`` per user → APPEND-mode parquet sink.
+    """Streaming sessionization end-to-end: file stream watermarked by
+    ``watermark`` → :func:`sessionized_agg` (``session_window(gap)``
+    per user) → APPEND-mode parquet sink.
     Append mode only emits a session once the watermark passes its
     end, so a bounded replay must (a) keep the watermark delay ≥ the
     staged span (files replay unordered — a narrower delay would drop
@@ -656,19 +498,9 @@ def run_stream_sessionized_to_parquet(
         .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
     )
-    sessions = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("sess"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("sess.start").alias("session_start"),
-            F.col("sess.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
     q = (
-        sessions.writeStream.format("parquet")
+        sessionized_agg(stream.withWatermark("ts", watermark), gap)
+        .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")

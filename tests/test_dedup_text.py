@@ -298,35 +298,6 @@ def test_containment_pairs_asymmetric(spark):
     )
 
 
-def test_prefix_filter_matches_plain_jaccard(spark):
-    """Prefix filtering is an exact optimization: same pair set as the
-    all-shared-items join, with candidates drawn only from rarest-first
-    prefixes."""
-    d = docs(
-        spark,
-        [
-            (1, "a b c d e f g h"),
-            (2, "a b c d e f g x"),   # near-dup of 1
-            (3, "p q r s t u v w"),
-            (4, "p q r s t u v z"),   # near-dup of 3
-            (5, "a p m n o k l j"),   # shares only hot singles
-        ],
-    )
-    sets = dedup.ngram_set(d, n=3)
-    plain = {
-        (r.id_a, r.id_b, r.n_common, round(r.jaccard, 9))
-        for r in dedup.jaccard_pairs(sets, item_col="shingle", threshold=0.5).collect()
-    }
-    pf = {
-        (r.id_a, r.id_b, r.n_common, round(r.jaccard, 9))
-        for r in dedup.prefix_filter_jaccard_pairs(
-            sets, item_col="shingle", threshold=0.5
-        ).collect()
-    }
-    assert pf == plain
-    assert len(pf) == 2  # (1,2) and (3,4)
-
-
 # ------------------------------------------------------- chunk dup profile
 
 

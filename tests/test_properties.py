@@ -49,36 +49,6 @@ def test_upsert_output_keys_unique_property(spark, rows):
     assert len(keys) == len(set(keys))
 
 
-# small word pool => high collision probability => real near-dup pairs
-WORDS = st.sampled_from(
-    ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta"]
-)
-DOC = st.lists(WORDS, min_size=3, max_size=12).map(" ".join)
-
-
-@settings(max_examples=8, deadline=None)
-@given(st.lists(DOC, min_size=2, max_size=10))
-def test_prefix_filter_equals_plain_jaccard_property(spark, texts):
-    """Prefix filtering (All-Pairs lemma) must reproduce the plain
-    shared-item join's pair set EXACTLY on any corpus — zero false
-    negatives from the prefix, zero false positives after verify."""
-    from data_integration_and_visualization_uc3m_spark.operators import dedup
-
-    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
-    sets = dedup.token_set(df)
-    plain = {
-        (r.id_a, r.id_b, r.n_common)
-        for r in dedup.jaccard_pairs(sets, threshold=0.5).collect()
-    }
-    pf = {
-        (r.id_a, r.id_b, r.n_common)
-        for r in dedup.prefix_filter_jaccard_pairs(
-            sets, item_col="token", threshold=0.5
-        ).collect()
-    }
-    assert pf == plain
-
-
 @settings(max_examples=8, deadline=None)
 @given(
     st.lists(

@@ -22,7 +22,8 @@ def test_cosine_topk_self_is_top(spark):
             (3, [-1.0, 0.0, 0.0]),
         ],
     )
-    got = similarity.cosine_topk(e, [1.0, 0.0, 0.0], k=2).collect()
+    q = vecs(spark, [(99, [1.0, 0.0, 0.0])])
+    got = similarity.cosine_topk_rel(e, q, k=2).collect()
     assert [r.vec_id for r in got] == [0, 1]
     assert abs(got[0].cosine - 1.0) < 1e-12
 
@@ -182,12 +183,6 @@ def test_knn_beam_search_zero_norm_query_empty(spark):
         e.filter(F.col("vec_id") < 2), beam=2, hops=1,
     ).collect()
     assert out == []  # zero-norm query visits nothing, loudly-empty
-
-
-def test_lsh_topk_returns_query_bucket_hits(spark):
-    e = vecs(spark, [(i, [float(i == j) for j in range(8)]) for i in range(8)])
-    got = similarity.lsh_topk(e, [1.0] + [0.0] * 7, n_planes=4, k=3).collect()
-    assert any(r.vec_id == 0 for r in got)
 
 
 def test_media_payload_metadata(spark):

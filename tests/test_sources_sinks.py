@@ -125,8 +125,8 @@ def test_retry_backoff(spark):
 
 
 def test_xlsx_bridge_header_offset(spark, tmp_path):
-    """S4 executes in this container: the stdlib writer builds the
-    fixture and read_xlsx parses it (openpyxl absent → zip+XML path).
+    """S4 executes without third-party deps: the stdlib writer builds
+    the fixture and read_xlsx parses it with the zip+XML parser.
     header_row=2 ⇒ spreadsheet row 3 is the header, matching the
     reference's pandas header=2 (crime_immigration_etl.py:141)."""
     from data_integration_and_visualization_uc3m_spark.sources.xlsx import (
@@ -138,6 +138,21 @@ def test_xlsx_bridge_header_offset(spark, tmp_path):
     df = read_xlsx(spark, p, header_row=2)
     assert df.columns == ["Iso3_code"]
     assert [r.Iso3_code for r in df.collect()] == ["ESP"]
+
+
+def test_xlsx_header_row_beyond_sheet_raises(spark, tmp_path):
+    """A header row past the sheet's last row is the typed error, not
+    an IndexError or an empty frame."""
+    from data_integration_and_visualization_uc3m_spark.sources.xlsx import (
+        XlsxUnavailable, read_xlsx, write_xlsx,
+    )
+
+    p = str(tmp_path / "short.xlsx")
+    write_xlsx([["junk1"], ["Iso3_code"], ["ESP"]], p)
+    assert read_xlsx(spark, p, header_row=1).columns == ["Iso3_code"]
+    beyond = r"header_row=3 beyond sheet \(3 rows\)"
+    with pytest.raises(XlsxUnavailable, match=beyond):
+        read_xlsx(spark, p, header_row=3)
 
 
 def test_xlsx_stdlib_parser_types_and_gaps(spark, tmp_path):
@@ -210,14 +225,14 @@ def test_xlsx_sheet_order_numeric_and_name_escaping(tmp_path):
 
 def test_read_json_with_nested_schema(spark, tmp_path):
     from data_integration_and_visualization_uc3m_spark.schemas import RAW_POPULATION
-    from data_integration_and_visualization_uc3m_spark.sources.readers import read_json
+    from data_integration_and_visualization_uc3m_spark.sources.readers import read_jsonl
 
     p = tmp_path / "rows.jsonl"
     p.write_text(
         '{"countryiso3code":"ESP","country":{"id":"ES","value":"Spain"},"value":"47000000","year_id":2019}\n'
         '{"countryiso3code":"FRA","country":{"id":"FR","value":null},"value":"bad","year_id":2019}\n'
     )
-    df = read_json(spark, str(p), RAW_POPULATION)
+    df = read_jsonl(spark, str(p), RAW_POPULATION)
     rows = {r.countryiso3code: r for r in df.collect()}
     assert rows["ESP"].country.value == "Spain"
     assert rows["FRA"].country.value is None  # nested null preserved
@@ -262,21 +277,6 @@ def test_write_partitioned_sorted_layout_and_pruning(spark, tmp_path):
     assert back.filter(F.col("lang") == "en").count() == 100
 
 
-def test_xlsx_jvm_path_raises_cleanly_without_jar(spark, tmp_path):
-    # the spark-excel jar is not in this image: the JVM path must fail
-    # with the typed error (NOT a raw ClassNotFoundException) so callers
-    # can fall back to the pandas bridge.
-    import pytest
-
-    from data_integration_and_visualization_uc3m_spark.sources.xlsx import (
-        XlsxUnavailable,
-        read_xlsx_jvm,
-    )
-
-    with pytest.raises(XlsxUnavailable):
-        read_xlsx_jvm(spark, str(tmp_path / "t.xlsx"))
-
-
 def test_parquet_schema_evolution_merge(spark, tmp_path):
     # files written before a column existed must read back with NULLs,
     # not fail — the long-lived-table contract
@@ -296,33 +296,6 @@ def test_parquet_schema_evolution_merge(spark, tmp_path):
     assert sorted(got.columns) == ["id", "name", "score"]
     rows = {r.id: (r.name, r.score) for r in got.collect()}
     assert rows == {1: ("a", None), 2: ("b", 9.5)}
-
-
-def test_audited_write_single_pass_metrics(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from data_integration_and_visualization_uc3m_spark.sinks.writers import (
-        audited_write_parquet,
-    )
-
-    df = spark.createDataFrame(
-        [(1, 10.0, "a"), (2, None, "b"), (3, 30.0, None)],
-        "k long, v double, s string",
-    )
-    out = str(tmp_path / "audited")
-    got = audited_write_parquet(
-        df,
-        out,
-        metrics={
-            "n_rows": F.count(F.lit(1)),
-            "n_null_v": F.sum(F.col("v").isNull().cast("long")),
-            "sum_v": F.sum("v"),
-            "max_k": F.max("k"),
-        },
-    )
-    assert got == {"n_rows": 3, "n_null_v": 1, "sum_v": 40.0, "max_k": 3}
-    # the metrics observed exactly the rows the writer consumed
-    assert spark.read.parquet(out).count() == 3
 
 
 def test_orc_roundtrip(spark, tmp_path):

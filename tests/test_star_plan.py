@@ -89,7 +89,13 @@ def test_immigration_golden_rate(spark):
     }
 
 
-def test_validate_and_idempotent_load(spark):
+def test_validate_and_idempotent_load(spark, tmp_path):
+    from data_integration_and_visualization_uc3m_spark.operators import upsert
+    from data_integration_and_visualization_uc3m_spark.schemas import (
+        LOAD_ORDER,
+        NATURAL_KEYS,
+    )
+
     aggregates = spark.createDataFrame([("WLD",)], "code string")
     country, population = star.transform_country_and_population(
         raw_population(spark), aggregates
@@ -98,12 +104,20 @@ def test_validate_and_idempotent_load(spark):
     report = star.validate_star(tables)
     assert all(v == 0 for v in report.values()), report
 
-    loaded_once = star.load_star({}, tables)
-    loaded_twice = star.load_star(loaded_once, tables)
+    def load() -> dict[str, list[tuple]]:
+        out = {}
+        for name in (t for t in LOAD_ORDER if t in tables):
+            root = str(tmp_path / name)
+            upsert.write_upsert_parquet(root, tables[name], NATURAL_KEYS[name])
+            live = upsert.read_upsert_parquet(spark, root)
+            out[name] = sorted(map(tuple, live.collect()))
+        return out
+
+    loaded_once = load()
+    loaded_twice = load()
     for name in tables:
-        a = sorted(map(tuple, loaded_once[name].collect()))
-        b = sorted(map(tuple, loaded_twice[name].collect()))
-        assert a == b, f"{name} not idempotent"
+        assert loaded_once[name], f"{name} loaded nothing"
+        assert loaded_once[name] == loaded_twice[name], f"{name} not idempotent"
 
 
 def _reference_report(tables):

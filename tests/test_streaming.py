@@ -36,7 +36,7 @@ def test_stateful_running_totals(spark, tmp_path):
         .parquet(src_dir)
     )
     q = (
-        se.running_user_totals(stream)
+        se.running_user_totals_exact(stream)
         .writeStream.outputMode("update")
         .format("memory")
         .queryName("t_state")
@@ -47,22 +47,25 @@ def test_stateful_running_totals(spark, tmp_path):
     finally:
         q.stop()
     # last update per user must equal the batch ground truth
-    from pyspark.sql import functions as F, Window
+    from pyspark.sql import functions as F
 
     got = spark.sql("SELECT * FROM t_state")
     # memory sink in update mode appends each state change; dedup to the
     # final row per user (max n_events is the last state)
-    final = (
-        got.groupBy("user_id")
-        .agg(F.max("n_events").alias("n_events"))
+    final = got.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"),
+        F.max_by("total_micros", "n_events").alias("total_micros"),
     )
     truth = (
         spark.read.parquet(src_dir)
         .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_truth"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.floor(F.col("value") * 1e6).cast("long")).alias("total_micros"),
+        )
     )
-    diff = final.join(truth, "user_id").filter(F.col("n_events") != F.col("n_truth"))
-    assert truth.count() > 0 and diff.count() == 0
+    want = sorted(map(tuple, truth.collect()))
+    assert want and sorted(map(tuple, final.collect())) == want
 
 
 def test_stream_dedup_within_watermark(spark, tmp_path):
@@ -477,49 +480,6 @@ def test_curate_stream_batch_parity_and_gate(spark):
     # stateless: applying twice is identical (deterministic)
     again = {r.doc_id for r in curate_stream(d, 0.5, "scur", 0.25).collect()}
     assert ids == again
-
-
-def test_tws_totals_runs_or_gates_cleanly(spark, tmp_path):
-    """The transformWithStateInPandas twin of the running-totals
-    operator: when protobuf is present it must hash-match the batch
-    GROUP BY exactly (same fixed-point contract as the
-    applyInPandasWithState path); when absent it must raise the
-    explicit gate, not crash a worker mid-stream."""
-    import pyspark.sql.functions as F
-
-    from data_integration_and_visualization_uc3m_spark.operators.upsert import read_upsert_parquet
-    from data_integration_and_visualization_uc3m_spark.sources.readers import load_table
-    from data_integration_and_visualization_uc3m_spark.streaming import events as se
-
-    try:
-        se._require_tws()
-    except se.TransformWithStateUnavailable:
-        import pytest as _pytest
-
-        with _pytest.raises(se.TransformWithStateUnavailable, match="protobuf"):
-            se.running_user_totals_tws(
-                load_table(spark, "/root/testdata/sf0.001", "events")
-            )
-        return
-
-    e = load_table(spark, "/root/testdata/sf0.001", "events")
-    src = str(tmp_path / "src")
-    e.repartition(4).write.mode("overwrite").parquet(src)
-    se.run_stream_tws_totals(
-        spark, src, str(tmp_path / "target"), str(tmp_path / "ckpt")
-    )
-    got = read_upsert_parquet(spark, str(tmp_path / "target")).select(
-        "user_id", "n_events", "total_micros"
-    )
-    batch = e.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.floor(F.col("value") * 1e6).cast("long")).alias(
-            "total_micros"
-        ),
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, batch.collect())
-    )
 
 
 def test_ann_index_sink_replay_idempotent(spark, tmp_path):

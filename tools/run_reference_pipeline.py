@@ -56,6 +56,7 @@ def main() -> None:
         LOAD_ORDER,
         RAW_CRIME,
         RAW_POPULATION,
+        YEARS,
     )
     from data_integration_and_visualization_uc3m_spark.session import get_spark
     from data_integration_and_visualization_uc3m_spark.sinks.writers import (
@@ -107,7 +108,7 @@ def main() -> None:
         for r in raw_immig.select("geo").distinct().collect()
         if r.geo and len(r.geo) == 2
     ]
-    years = [2018, 2019, 2020, 2021, 2022]
+    years = list(YEARS)
     iso3_of = {a2.lower(): a3 for a2, a3, _, _ in iso3166.COUNTRIES}
     iso3_of.update(dict(iso3166.EXTRA_ALIASES))
     name_of = {a3: name for _, a3, name, _ in iso3166.COUNTRIES}
