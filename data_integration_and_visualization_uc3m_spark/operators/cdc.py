@@ -72,15 +72,6 @@ def snapshot_diff(
     return joined.withColumn(CHANGE_COL, change).drop("_old_digest", "_new_digest")
 
 
-def changes_only(diff: DataFrame) -> DataFrame:
-    """The incremental payload: everything except unchanged rows.
-
-    At 100 TB this filter is why CDC wins — downstream consumers see
-    |delta| rows, not |table| rows.
-    """
-    return diff.filter(F.col(CHANGE_COL) != "unchanged")
-
-
 def incremental_agg_update(
     prior: DataFrame,
     diff: DataFrame,

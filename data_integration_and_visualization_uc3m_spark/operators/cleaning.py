@@ -26,13 +26,6 @@ def normalize_string(col: Column | str) -> Column:
     return F.lower(F.trim(c))
 
 
-def normalize_whitespace(col: Column | str) -> Column:
-    """C1 extension — collapse internal whitespace runs to single spaces
-    (report §3.1.1 "remove extra spaces")."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.trim(c), r"\s+", " ")
-
-
 def coerce_numeric(col: Column | str, to: str = "double") -> Column:
     """C2 — coercing numeric cast: NULL on unparseable input.
 

@@ -304,19 +304,6 @@ def contaminated_docs(
     )
 
 
-def decontaminate(
-    corpus_df: DataFrame,
-    corpus_sets: DataFrame,
-    benchmark_sets: DataFrame,
-    id_col: str = "doc_id",
-    item_col: str = "shingle",
-) -> DataFrame:
-    """Corpus rows surviving decontamination (anti-join against the
-    contaminated-id set)."""
-    hits = contaminated_docs(corpus_sets, benchmark_sets, id_col, item_col)
-    return corpus_df.join(hits.select(id_col), id_col, "left_anti")
-
-
 def jaccard_pairs_df_capped(
     sets_df: DataFrame,
     max_df_frac: float = 0.02,
@@ -787,16 +774,6 @@ def connected_components(
     # checkpoint (prev_round_id) stays — it backs the returned frame.
     _unpersist(edges_id)
     return labels.select(F.col("u").alias("doc_id"), F.col("label").alias("cluster_id"))
-
-
-def dedup_survivors(
-    docs: DataFrame, clusters: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Survivor selection: one representative per cluster (the min id),
-    plus every document not in any cluster. The final step of the
-    near-dup pipeline: pairs → components → keep-set."""
-    drop = clusters.filter(F.col(id_col) != F.col("cluster_id")).select(id_col)
-    return docs.join(drop, on=id_col, how="left_anti")
 
 
 # --- SimHash ---------------------------------------------------------------

@@ -46,7 +46,6 @@ def validated_join(
     on: list[str],
     how: str = "inner",
     validate_unique: bool = True,
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """J1 — equi-join with many-to-one validation.
 
@@ -56,8 +55,7 @@ def validated_join(
     """
     if validate_unique:
         assert_unique_keys(dim, on, side="dim")
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(d, on=on, how=how)
+    return fact.join(F.broadcast(dim), on=on, how=how)
 
 
 def lookup_join_with_fallback(
@@ -65,8 +63,6 @@ def lookup_join_with_fallback(
     lookup: DataFrame,
     key_expr,
     out_col: str,
-    lookup_key: str = "alias",
-    lookup_value: str = "canonical",
 ) -> DataFrame:
     """J2/J3 — broadcast dictionary-lookup join with fallback-to-input.
 
@@ -76,12 +72,13 @@ def lookup_join_with_fallback(
     part ports forget — becomes ``coalesce(canonical, original)`` after a
     left join against the broadcast lookup table.
 
-    ``key_expr`` is the (already-normalized) Column to look up.
+    ``key_expr`` is the (already-normalized) Column to look up in
+    ``lookup``'s ``alias`` column; its ``canonical`` column is the value.
     """
     probe = df.withColumn("__lk", key_expr)
     lk = F.broadcast(
         lookup.select(
-            F.col(lookup_key).alias("__lk"), F.col(lookup_value).alias("__lv")
+            F.col("alias").alias("__lk"), F.col("canonical").alias("__lv")
         )
     )
     joined = probe.join(lk, on="__lk", how="left")

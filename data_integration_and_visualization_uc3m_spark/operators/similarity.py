@@ -146,7 +146,7 @@ def cosine_pairs_blocked(
     cell / ``label``), turning the O(n²) all-pairs cross join into a
     per-block self-join: one shuffle on the block key, quadratic only
     in the cell size. At 100 TB the block key comes from an IVF coarse
-    quantizer (see :func:`ivf_topk`) so cells stay bounded; skewed
+    quantizer (see :func:`ivf_topk_rel`) so cells stay bounded; skewed
     cells get salted sub-blocks.
 
     Exact cosine (left-fold double dot product) is the residual filter,
@@ -217,62 +217,6 @@ def label_centroids_nano(
     )
 
 
-def ivf_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 15,
-    nprobe: int = 3,
-    block_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-style ANN: rank coarse-quantizer cells by centroid distance
-    to the query, probe the ``nprobe`` nearest cells, exact cosine
-    top-k inside them.
-
-    This is the scale path for similarity search: the full corpus is
-    partitioned by cell (at rest: parquet partitioned by cell id), a
-    probe touches nprobe/cells of the data, and partition pruning skips
-    the rest at the scan. Everything is deterministic — centroid sums in
-    fixed point, distances in fixed point, ordered tiebreaks — so the
-    whole ANN pipeline is oracle-checkable (rare for ANN).
-    """
-    q = [float(x) for x in query_vec]
-    qarr = F.array(*[F.lit(x) for x in q])
-
-    cents = label_centroids_nano(df, block_col, vec_col)
-    comp = (F.col("sum_nano").cast("double") / F.col("cnt") / NANO)
-    qcomp = F.element_at(qarr, F.col("dim") + 1)
-    diff = qcomp - comp
-    dist = cents.select(
-        "block", (F.floor(diff * diff * NANO)).cast("long").alias("term_nano")
-    ).groupBy("block").agg(F.sum("term_nano").alias("dist_nano"))
-
-    # nprobe nearest cells via TakeOrdered (global sort-limit on a
-    # codebook-sized input) — not a row_number over an unpartitioned
-    # window, which would force a single-partition WindowExec.
-    probed = (
-        dist.orderBy(F.col("dist_nano"), F.col("block"))
-        .limit(nprobe)
-        .select("block")
-    )
-
-    v = F.col(vec_col)
-    norm = F.sqrt(_dot(v, v))
-    cos = _dot(v, qarr) / (norm * F.sqrt(_dot(qarr, qarr)))
-    cand = df.join(
-        F.broadcast(probed), df[block_col] == F.col("block"), "left_semi"
-    )
-    return (
-        # zero-norm guard: 0/0 = NaN sorts ABOVE every real cosine in a
-        # descending order-by, so degenerate vectors would win the top-k.
-        cand.filter(norm > 0)
-        .select(F.col(id_col), F.col(block_col), cos.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
 def quantize_embeddings(
     df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
@@ -304,82 +248,6 @@ def quantize_embeddings(
     return staged.select(id_col, "scale", codes.alias("codes"), "dim")
 
 
-def semdedup(
-    df: DataFrame,
-    seeds: list[list[float]],
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
-    at web-scale through semantic deduplication"): embedding-space near
-    duplicates found by (1) assigning every vector to its nearest
-    coarse centroid, then (2) exact cosine pairs ONLY within a cluster
-    — the all-pairs O(n²) collapses to per-cluster blocks exactly like
-    the paper's k-means partitioning. Policy: within a cluster, any
-    vector with a ≥``threshold`` cosine neighbor of smaller id is
-    flagged a duplicate (keep-lowest-id, the deterministic stand-in
-    for the paper's keep-one-per-group).
-
-    The centroid codebook is a literal array in the plan (broadcast
-    equivalent), so assignment is entirely map-side: per-seed cosine
-    via the left-fold dot product, argmax via ``array_max`` over
-    (cos, -seed, seed) structs — larger cosine wins, ties go to the
-    smaller seed id. No shuffle until the within-cluster pair join.
-    At 100 TB the codebook comes from a trained coarse quantizer
-    (cluster count sized so blocks stay bounded, cf. ivf_topk) and the
-    corpus is stored partitioned by cluster id.
-
-    Returns one verdict row per non-degenerate vector:
-    (id, cluster, is_dup). Zero-norm vectors are dropped up front
-    (cosine undefined; same guard as cosine_pairs_blocked).
-    """
-    for i, s in enumerate(seeds):
-        if not any(float(x) != 0.0 for x in s):
-            raise ValueError(
-                f"seed {i} has zero norm — cosine to it is undefined; "
-                "codebooks must contain non-degenerate centroids"
-            )
-    v = F.col(vec_col)
-    staged = df.select(
-        F.col(id_col), v.alias("_v"), F.sqrt(_dot(v, v)).alias("_norm")
-    ).filter(F.col("_norm") > 0)
-    choices = []
-    for i, s in enumerate(seeds):
-        sarr = F.array(*[F.lit(float(x)) for x in s])
-        cos_i = _dot(F.col("_v"), sarr) / (
-            F.col("_norm") * F.sqrt(_dot(sarr, sarr))
-        )
-        choices.append(
-            F.struct(
-                cos_i.alias("c"),
-                F.lit(-i).alias("ns"),
-                F.lit(i).alias("sid"),
-            )
-        )
-    cluster = F.array_max(F.array(*choices)).getField("sid")
-    assigned = staged.select(
-        F.col(id_col), F.col("_v").alias(vec_col), cluster.alias("cluster")
-    )
-    pairs = cosine_pairs_blocked(
-        assigned,
-        block_col="cluster",
-        threshold=threshold,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
-    dups = (
-        pairs.select(F.col("vec_b").alias(id_col))
-        .distinct()
-        .withColumn("_is_dup", F.lit(True))
-    )
-    return assigned.join(dups, id_col, "left").select(
-        F.col(id_col),
-        F.col("cluster"),
-        F.coalesce(F.col("_is_dup"), F.lit(False)).alias("is_dup"),
-    )
-
-
 def hard_negatives(
     df: DataFrame,
     anchors: DataFrame,
@@ -393,7 +261,7 @@ def hard_negatives(
     near-miss examples that teach a metric model its decision
     boundary. The anchor set broadcasts (it is a bounded sample by
     contract — mining with a corpus-sized anchor set is an ANN-join
-    problem, see ivf_topk); scoring is map-side left-fold dot
+    problem, see ivf_topk_rel); scoring is map-side left-fold dot
     products (bit-identical cross-engine), and the top-k runs per
     anchor with a deterministic id tiebreak."""
     from pyspark.sql import Window
@@ -421,116 +289,9 @@ def hard_negatives(
     )
 
 
-def _sq_dist_nano(a_exprs: list, b_exprs: list) -> F.Column:
-    """Σ(a−b)² over paired column expressions, floored to nano fixed
-    point — exact-integer distance cells for PQ/IVF codebook math.
-    The fold is an explicit left-to-right chain so both engines add in
-    the same order."""
-    acc = F.lit(0.0)
-    for x, y in zip(a_exprs, b_exprs):
-        d = x.cast("double") - y.cast("double")
-        acc = acc + d * d
-    return F.floor(acc * F.lit(NANO)).cast("long")
-
-
-def pq_codes(
-    df: DataFrame,
-    seeds: list[list[float]],
-    m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Product quantization (Jégou et al. 2011): split each vector into
-    ``m`` subvectors and store only the index of the nearest codebook
-    centroid per subspace — the memory layout behind every billion-
-    scale ANN index (m log₂k bits per vector instead of 4·d bytes).
-
-    The codebook here is derived from the ``seeds`` rows (a trained
-    k-means codebook at scale): centroid c of subspace j is seed c's
-    j-th subvector. Assignment is ENTIRELY map-side — the codebook is
-    a literal in the plan, each (subspace, centroid) distance is an
-    exact nano fixed-point integer, argmin tie-breaks to the smaller
-    centroid id. Output: one row per vector with int codes c0..c{m-1}.
-    """
-    dim = len(seeds[0])
-    sub = dim // m
-    v = F.col(vec_col)
-    out = [F.col(id_col)]
-    for j in range(m):
-        cands = []
-        a = [F.element_at(v, j * sub + i + 1) for i in range(sub)]
-        for c, s in enumerate(seeds):
-            b = [F.lit(float(s[j * sub + i])) for i in range(sub)]
-            cands.append(
-                F.struct(
-                    _sq_dist_nano(a, b).alias("d"),
-                    F.lit(c).alias("c"),
-                )
-            )
-        out.append(
-            F.array_min(F.array(*cands)).getField("c").alias(f"c{j}")
-        )
-    return df.select(*out)
-
-
-def pq_adc_topk(
-    df: DataFrame,
-    seeds: list[list[float]],
-    query_vec: list[float],
-    k: int = 10,
-    m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Asymmetric distance computation over PQ codes: the query stays
-    full-precision, each database vector is its m codes, and the
-    approximate distance is the sum of per-subspace table lookups
-    dist(q_sub_j, centroid[code_j]) — m integer adds per vector
-    instead of d float ops, the classic ADC trade.
-
-    The m×k distance table is built IN-PLAN from the same literal
-    codebook (Catalyst constant-folds it), the lookup is a branch over
-    the code column (k is small by construction), and the final top-k
-    is a TakeOrdered with an id tiebreak. Exact integer adds ⇒
-    oracle-reproducible, rare for ANN."""
-    import math
-
-    dim = len(seeds[0])
-    sub = dim // m
-    q = [float(x) for x in query_vec]
-    codes = pq_codes(df, seeds, m, id_col, vec_col)
-    # The m×k table cells depend only on the query and the codebook, so
-    # they are computed HERE with the same IEEE ops in the same order
-    # (left-to-right double fold, ×1e9, floor) the engines would use —
-    # bit-identical, and the plan carries 32 integer literals instead
-    # of 32 folded distance subtrees (measured: ~2 s of analysis/
-    # codegen overhead gone at every SF).
-    adc = F.lit(0).cast("long")
-    for j in range(m):
-        cells = []
-        for c in range(len(seeds)):
-            acc = 0.0
-            for i in range(sub):
-                dff = q[j * sub + i] - float(seeds[c][j * sub + i])
-                acc = acc + dff * dff
-            cells.append(int(math.floor(acc * NANO)))
-        cell = F.lit(None).cast("long")
-        # reversed so the final expression checks c=0 first at runtime
-        for c in reversed(range(len(seeds))):
-            cell = F.when(
-                F.col(f"c{j}") == c, F.lit(cells[c]).cast("long")
-            ).otherwise(cell)
-        adc = adc + cell
-    return (
-        codes.select(F.col(id_col), adc.alias("adc_dist_nano"))
-        .orderBy(F.col("adc_dist_nano"), F.col(id_col))
-        .limit(k)
-    )
-
-
 # ---------------------------------------------------------------------
-# Relation-form codebooks: the coarse quantizer as a DataFrame instead
-# of a driver-collected Python literal. Training is one Lloyd
+# Relation-form codebooks: the coarse quantizer is a DataFrame, never a
+# driver-collected Python literal. Training is one Lloyd
 # refinement seeded from the k lowest-id vectors — exact fixed-point
 # centroid means (nano-quantized integer sums ⇒ summation-order-free ⇒
 # oracle-portable doubles), exact integer distances, deterministic
@@ -678,10 +439,14 @@ def pq_codes_rel(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """pq_codes with the codebook as a RELATION: the collapsed codebook
-    broadcasts as one nested row and per-subspace argmin runs map-side
-    over array slices — same exact nano fixed-point distances and
-    smaller-centroid tiebreak as the literal path, zero collects."""
+    """Product quantization (Jégou et al. 2011): split each vector into
+    ``m`` subvectors and store only the id of the nearest codebook
+    centroid per subspace (m log₂k bits per vector instead of 4·d
+    bytes). Centroid c of subspace j is the j-th slice of codebook row
+    c. The collapsed codebook broadcasts as one nested row and the
+    per-subspace argmin runs map-side over array slices: exact nano
+    fixed-point distances, ties to the smaller centroid id, zero
+    collects. Output: one row per vector with int codes c0..c{m-1}."""
     sub = dim // m
     cb1 = _collapse_codebook(codebook)
     staged = df.crossJoin(F.broadcast(cb1)).select(
@@ -712,7 +477,11 @@ def pq_adc_topk_rel(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """pq_adc_topk with codebook AND query as relations. The m×k
+    """Asymmetric distance computation over PQ codes, with codebook
+    AND query as relations: the query stays full-precision, each
+    database vector is its m codes, and the approximate distance is
+    the sum of per-subspace lookups dist(q_sub_j, centroid[code_j]) —
+    m integer adds per vector instead of d float ops. The m×k
     distance table is computed in-plan on the broadcast side (codebook
     ⨯ 1-row query — k rows), collapsed to one lookup array indexed by
     sub·k + code, and the ADC sum is m exact integer adds per data row
@@ -886,9 +655,15 @@ def ivf_topk_rel(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """ivf_topk with the query as a 1-row broadcast relation — same
-    fixed-point centroid ranking, probe-prune, exact cosine re-rank;
-    no driver fetch of the query vector."""
+    """IVF-style ANN against a 1-row broadcast query relation: rank
+    coarse-quantizer cells by fixed-point centroid distance to the
+    query, probe the ``nprobe`` nearest, exact cosine top-k inside them
+    (zero-norm vectors excluded, ``(cosine DESC, id)`` tiebreak).
+
+    At rest the corpus is partitioned by cell id, so a probe touches
+    nprobe/cells of the data and partition pruning skips the rest.
+    Centroid sums and distances are fixed point, so the whole ANN
+    pipeline is oracle-checkable; no driver fetch of the query vector."""
     probed = _probe_blocks(df, qdf, nprobe, block_col, vec_col)
     qn = qdf.select(F.col(vec_col).alias("_qv")).select(
         "_qv", F.sqrt(_dot(F.col("_qv"), F.col("_qv"))).alias("_qn")
@@ -999,11 +774,18 @@ def semdedup_rel(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """semdedup with the coarse codebook as a RELATION: zero-norm
-    centroids are filtered (cosine to them undefined — the relation
-    twin of the literal path's ValueError), the collapsed codebook
-    broadcasts, and assignment is map-side argmax cosine with
-    smaller-centroid tiebreak. Same within-cluster pair policy."""
+    """SemDeDup (Abbas et al. 2023): assign every vector to its
+    nearest coarse centroid, then form exact cosine pairs ONLY within a
+    cluster, so the all-pairs O(n²) collapses to per-cluster blocks.
+    Within a cluster, a vector with a ≥``threshold`` cosine neighbour
+    of smaller id is flagged a duplicate (keep-lowest-id).
+
+    The codebook is a ``(c, centroid)`` relation: zero-norm centroids
+    are filtered out (cosine to them is undefined, so no vector is
+    assigned to them), the collapsed codebook broadcasts, and
+    assignment is map-side argmax cosine with smaller-centroid
+    tiebreak. Returns ``(id, cluster, is_dup)`` per non-zero vector;
+    zero-norm vectors are dropped."""
     cbn = codebook.filter(
         F.aggregate(
             F.transform(F.col("centroid"), lambda x: x * x),

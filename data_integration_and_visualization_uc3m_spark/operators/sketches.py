@@ -165,18 +165,3 @@ def bloom_pass_keys(
         .filter(F.col("__nhit") == k)
         .select(probe_col)
     )
-
-
-def bloom_prefilter(
-    probe: DataFrame,
-    probe_col: str,
-    bits: DataFrame,
-    n_bits: int = 4096,
-    k: int = 3,
-    seed: str = "bloom",
-) -> DataFrame:
-    """Rows of ``probe`` surviving the Bloom membership test — a
-    broadcast left-semi join against the passing key set, so the probe
-    table itself never shuffles."""
-    keys = bloom_pass_keys(probe, probe_col, bits, n_bits=n_bits, k=k, seed=seed)
-    return probe.join(F.broadcast(keys), probe_col, "left_semi")

@@ -3,8 +3,10 @@
 
 pandas positional slices (``df[a:b]``, ``map-making/create-maps.py:22-24``)
 are order-defined by file position; Spark DataFrames are unordered sets,
-so every slice here takes an EXPLICIT sort key (SURVEY §7.4.6) and a
-unique tiebreaker to make results deterministic across engines and runs.
+so every slice takes an EXPLICIT sort key (SURVEY §7.4.6) and a unique
+tiebreaker to make results deterministic across engines and runs. The
+F8 row-range slice itself is a ``row_number`` filter inline in the
+registered ``deterministic_slice`` query.
 
 Scale notes: row_number over a global orderBy is a single-partition
 window at the limit — fine for top-of-report slices (k rows), wrong for
@@ -16,21 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def deterministic_slice(
-    df: DataFrame, order_by: list[Column], start: int, end: int
-) -> DataFrame:
-    """F8 — positional row-range slice ``[start, end)`` (0-based) under an
-    explicit total order. Reference: viz size buckets
-    ``limits=[(0,3),(3,11),...]`` at ``map-making/create-maps.py:15,22-24``.
-    """
-    w = Window.orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") > start) & (F.col("__rn") <= end))
-        .drop("__rn")
-    )
 
 
 def top_k(df: DataFrame, order_by: list[Column], k: int) -> DataFrame:

@@ -56,13 +56,6 @@ def range_violations(df: DataFrame, predicate: Column) -> DataFrame:
     return df.filter(~F.coalesce(predicate, F.lit(False)))
 
 
-def code_length_violations(df: DataFrame, col: str, length: int) -> DataFrame:
-    """V-aux — CHAR(n) emulation for VARCHAR(3) ISO codes
-    (schema.sql:24; Spark has no fixed-length enforcement on write)."""
-    c = F.col(col)
-    return df.filter(c.isNull() | (F.length(c) != length))
-
-
 def expectation_report(
     df: DataFrame,
     row_rules: dict[str, Column],

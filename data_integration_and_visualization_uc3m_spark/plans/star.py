@@ -50,7 +50,6 @@ def iso2_lookup(spark: SparkSession) -> DataFrame:
 def transform_country_and_population(
     raw_pop: DataFrame,
     aggregate_codes: DataFrame,
-    alias_lookup: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Country dim + population fact (etl:154-210).
 
@@ -59,7 +58,8 @@ def transform_country_and_population(
       (etl:157-159; the code list is data-driven, etl:98-102)
     - ISO3 validity: len==3 & not null (etl:165-168)
     - nested country.value non-null (etl:171-174) — struct access
-    - name = lower∘trim, alias-lookup with fallback (etl:31-34,177-179)
+    - name = lower∘trim (etl:177-179); the reference's alias map
+      (etl:31-34) is not applied, so the World Bank name is kept
     - population = coerce(value) > 0, rounded to long (etl:182-192)
     - year_id int ≥ the first of ``schemas.YEARS`` (etl:195-196)
     - country dim = first-wins dedup on iso3, ordered by (name, year)
@@ -72,10 +72,6 @@ def transform_country_and_population(
     df = df.filter(filters.valid_code_length("countryiso3code", 3))
     df = df.filter(filters.non_null_nested("country", "value"))
     df = df.withColumn("country_name", cleaning.normalize_string(F.col("country.value")))
-    if alias_lookup is not None:
-        df = joins.lookup_join_with_fallback(
-            df, alias_lookup, F.col("country_name"), "country_name"
-        )
     df = df.withColumn("population_raw", cleaning.coerce_numeric("value", "double"))
     df = df.filter(filters.in_range("population_raw", low=None) & (F.col("population_raw") > 0))
     df = df.withColumn("population", cleaning.to_integer_rounded("population_raw", "long"))

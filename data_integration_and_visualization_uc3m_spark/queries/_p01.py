@@ -1616,7 +1616,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-loop iterative-algorithm pattern; O(diameter) rounds, one
     join+agg each). The SQL oracle uses a recursive CTE — identical
     fixpoint. Completes the dedup pipeline: candidates → verified
-    pairs → components → survivor selection (dedup_survivors op)."""
+    pairs → components → survivor selection (dedup_survivors_by_quality)."""
     pairs = dedup_minhash_lsh(spark, sf_dir).select("id_a", "id_b")
     return dedup.connected_components(pairs)
 

@@ -8,7 +8,7 @@ SESSIONS — overwrite in place instead of minting a fresh
 wrong" #2: the per-session keying leaked one directory per session per
 query; the r11 ADVICE fix at queries/_p09.py applied the stable-path
 discipline to the pyds round-trip only — this module applies it
-uniformly and sweeps the legacy leaked names once per process).
+uniformly).
 
 Concurrency note: the stable path means two CONCURRENT sessions running
 the same (tag, sf) would race on the directory. The driver, bench, and
@@ -26,58 +26,6 @@ import tempfile
 
 _ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_scratch")
 
-# Legacy prefixes this module's first use sweeps: the applicationId-
-# keyed dirs (one per session per query, r12 VERDICT #2) and the
-# mkdtemp-per-CALL dirs the e2e/streaming queries minted before round
-# 13 moved every site onto scratch_dir. All are owned by this package.
-_LEGACY_PREFIXES = (
-    "sg_pyds_rt_",
-    "sg_binfile_",
-    "sg_textlog_",
-    "sg_mergeschema_",
-    "sg_orc_rt_",
-    "sg_stream_e2e_", "sg_stream_dedup_", "sg_stream_lsh_",
-    "sg_stream_state_", "sg_stream_attr_", "sg_stream_sess_",
-    "sg_jsonl_", "sg_vdiff_", "sg_multifmt_", "sg_enrich_e2e_",
-    "sg_delete_", "sg_hist_", "sg_export_", "sg_curate_e2e_",
-    "sg_warehouse_", "sg_timetravel_", "sg_schema_evo_",
-    "sg_bucketed_", "sg_pyds_sink_", "sg_stateprobe_",
-)
-
-_swept = False
-
-
-def _sweep_legacy() -> None:
-    """Remove stale per-session scratch dirs from the old naming
-    scheme. Safe: the ``sg_`` prefixes are owned by this package and
-    never point at user data. Errors are ignored — a vanishing or
-    permission-odd temp entry must not fail a query."""
-    global _swept
-    if _swept:
-        return
-    _swept = True
-    tmp = tempfile.gettempdir()
-    try:
-        names = os.listdir(tmp)
-    except OSError:
-        return
-    # Age gate (ADVICE r13): an older-version session running
-    # CONCURRENTLY may still hold a lazy DataFrame over a legacy dir —
-    # rmtree'ing it mid-run would fail that session's query. Only sweep
-    # entries untouched for a day; anything younger is plausibly live
-    # and gets collected by a later session instead.
-    import time
-    cutoff = time.time() - 86400
-    for name in names:
-        if any(name.startswith(p) for p in _LEGACY_PREFIXES):
-            path = os.path.join(tmp, name)
-            try:
-                if os.path.getmtime(path) > cutoff:
-                    continue
-            except OSError:
-                continue
-            shutil.rmtree(path, ignore_errors=True)
-
 
 def scratch_dir(tag: str, sf_dir: str | None = None,
                 *, clean: bool = False) -> str:
@@ -89,7 +37,6 @@ def scratch_dir(tag: str, sf_dir: str | None = None,
     directory first (needed when files are written one-per-row and a
     shrunken input would otherwise leave stale rows behind).
     """
-    _sweep_legacy()
     leaf = tag if sf_dir is None else (
         f"{tag}_{os.path.basename(sf_dir.rstrip('/'))}"
     )

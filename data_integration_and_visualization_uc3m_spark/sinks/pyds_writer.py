@@ -9,7 +9,8 @@ must do (sinks/writers.py's stage-then-swap JDBC load, K3): tasks
 write uniquely-named ``*.jsonl.tmp`` part files, and ONLY the driver's
 commit renames them and writes the ``_MANIFEST.json`` — a reader that
 honors the manifest can never observe a half-written dataset, and a
-failed job (abort) leaves no visible parts behind.
+failed job (abort) leaves no visible parts behind, only an
+``_ABORTED-<job>`` tombstone that late sibling tasks check.
 
 Scale notes: each task streams its partition to its own part file
 (no driver collect, no cross-task coordination until the O(#tasks)
@@ -37,6 +38,47 @@ from pyspark.sql.datasource import (
 )
 
 MANIFEST = "_MANIFEST.json"
+
+
+def _tombstone(path: str, job_id: str) -> str:
+    return os.path.join(path, f"_ABORTED-{job_id}")
+
+
+def _remove_quietly(path: str) -> None:
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass
+
+
+def _drop_if_aborted(path: str, job_id: str, tmp: str) -> None:
+    """Executor side, after a task closed its tmp part. Spark fails the
+    job on the first task error WITHOUT waiting for sibling tasks, so
+    the driver's abort() can sweep the directory while a sibling is
+    still writing, and that sibling's tmp part lands after the sweep.
+    abort() drops a job-scoped tombstone BEFORE it sweeps: a task that
+    checks after the tombstone exists removes its own part, and a task
+    that checked earlier created its part earlier still, so the sweep's
+    listing holds it."""
+    if os.path.exists(_tombstone(path, job_id)):
+        _remove_quietly(tmp)
+
+
+def _abort_sweep(path: str, job_id: str, messages) -> None:
+    """Driver side: tombstone first, then remove every tmp part of
+    this job — the ones named by commit messages and the orphans of
+    tasks that never returned (matched on the job_id suffix). Other
+    jobs writing to the same path keep their in-flight tmp parts."""
+    os.makedirs(path, exist_ok=True)
+    with open(_tombstone(path, job_id), "w", encoding="utf-8"):
+        pass
+    for m in messages:
+        if m is not None:
+            _remove_quietly(m.tmp_path)
+    suffix = f"-{job_id}.jsonl.tmp"
+    for name in os.listdir(path):
+        if name.endswith(suffix):
+            _remove_quietly(os.path.join(path, name))
 
 
 @dataclass
@@ -88,6 +130,7 @@ class JsonlDirWriter(DataSourceWriter):
                 )
                 fh.write("\n")
                 n += 1
+        _drop_if_aborted(self.path, self.job_id, tmp)
         return PartFileCommit(tmp_path=tmp, n_rows=n, partition_id=pid)
 
     # -- driver side -----------------------------------------------------
@@ -131,19 +174,11 @@ class JsonlDirWriter(DataSourceWriter):
     def abort(self, messages) -> None:
         # messages can contain None for tasks that never returned — a
         # task that raised mid-write leaves an orphan tmp file that no
-        # commit message names, so sweep THIS JOB's *.jsonl.tmp files
-        # (matched on the job_id baked into every tmp name; ADVICE
-        # r10). A concurrent writer to the same path keeps its own
-        # in-flight tmp parts; committed parts lost their .tmp suffix
-        # at rename and are never touched.
-        for m in messages:
-            if m is not None and os.path.exists(m.tmp_path):
-                os.remove(m.tmp_path)
-        suffix = f"-{self.job_id}.jsonl.tmp"
-        if os.path.isdir(self.path):
-            for name in os.listdir(self.path):
-                if name.endswith(suffix):
-                    os.remove(os.path.join(self.path, name))
+        # commit message names, so the sweep matches THIS JOB's
+        # *.jsonl.tmp files on the job_id baked into every tmp name
+        # (ADVICE r10). Committed parts lost their .tmp suffix at
+        # rename and are never touched.
+        _abort_sweep(self.path, self.job_id, messages)
 
 
 class JsonlDirDataSource(DataSource):
@@ -314,6 +349,7 @@ class JsonlDirStreamWriter(DataSourceStreamWriter):
                 )
                 fh.write("\n")
                 n += 1
+        _drop_if_aborted(self.path, self.job_id, tmp)
         return PartFileCommit(tmp_path=tmp, n_rows=n, partition_id=pid)
 
     # -- driver side, once per epoch ------------------------------------
@@ -366,14 +402,7 @@ class JsonlDirStreamWriter(DataSourceStreamWriter):
                 os.remove(os.path.join(self.path, fname))
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is not None and os.path.exists(m.tmp_path):
-                os.remove(m.tmp_path)
-        suffix = f"-{self.job_id}.jsonl.tmp"
-        if os.path.isdir(self.path):
-            for fname in os.listdir(self.path):
-                if fname.endswith(suffix):
-                    os.remove(os.path.join(self.path, fname))
+        _abort_sweep(self.path, self.job_id, messages)
 
 
 def read_stream_manifests(path: str) -> list[dict]:

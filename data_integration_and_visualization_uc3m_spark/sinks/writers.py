@@ -32,28 +32,6 @@ def write_parquet_snapshot(
     w.parquet(path)
 
 
-def overwrite_partitions(
-    df: DataFrame, path: str, partition_by: list[str]
-) -> None:
-    """Dynamic partition overwrite — the incremental-refresh contract a
-    partitioned warehouse table needs: ``mode("overwrite")`` replaces
-    ONLY the partitions present in ``df`` and leaves every other
-    partition untouched (vs static overwrite, which truncates the
-    whole table first). This is how a daily job re-lands one day of a
-    year-partitioned fact without rewriting history, and it is
-    idempotent per partition — a retried job re-replaces the same
-    partitions to the same bytes. The conf is set per-write via
-    ``.option("partitionOverwriteMode", "dynamic")`` (write-scoped in
-    Spark 3.1+), so the session default stays static for callers that
-    rely on truncate-overwrite semantics."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_by)
-        .parquet(path)
-    )
-
-
 def write_orc_snapshot(
     df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
@@ -200,10 +178,7 @@ def jdbc_atomic_append(
     df: DataFrame,
     url: str,
     table: str,
-    batchsize: int = 1000,
     properties: dict[str, str] | None = None,
-    staging: str | None = None,
-    dialect: SwapDialect | None = None,
 ) -> int:
     """K3 — per-table commit/rollback against a LIVE database.
 
@@ -214,8 +189,9 @@ def jdbc_atomic_append(
     mid-load failure leaves the partitions that already committed.
     The warehouse-correct shape is STAGE-THEN-SWAP:
 
-    1. executors bulk-load a staging table (parallel, batched — the
-       K1 path; a failure here never touched the target), then
+    1. executors bulk-load a staging table ``{table}_STG`` (parallel,
+       batched — the K1 path; a failure here never touched the
+       target), then
     2. the driver runs ONE transactional ``INSERT INTO target
        SELECT * FROM staging`` inside the database — constraint
        violations roll back the entire statement, so the target is
@@ -236,12 +212,9 @@ def jdbc_atomic_append(
     DataFrame's column names verbatim and the INSERT side leaves them
     unquoted to match an unquoted-DDL target.
     """
-    stg = staging or f"{table}_STG"
-    dia = dialect or swap_dialect_for_url(url)
-    jdbc_writer(
-        df, url, stg, batchsize=batchsize, mode="overwrite",
-        properties=properties,
-    ).save()
+    stg = f"{table}_STG"
+    dia = swap_dialect_for_url(url)
+    jdbc_writer(df, url, stg, mode="overwrite", properties=properties).save()
     swap_sql = dia.insert_select(table, df.columns, stg, df.columns)
     jvm = df.sparkSession._jvm
     # The swap connection must authenticate exactly like the staging

@@ -61,7 +61,6 @@ def ingest_indicator_per_year(
     fetch: Callable[[str], object],
     url_template: str,
     years: Iterable[int],
-    schema: T.StructType = RAW_POPULATION,
 ) -> DataFrame:
     """S2/S3 — per-year indicator scan with literal year injection and
     all-or-nothing error absorption.
@@ -82,7 +81,7 @@ def ingest_indicator_per_year(
     except IngestError:
         all_rows = []
     # local_frame projects to the declared fields (sources carry extras)
-    return local_frame(spark, all_rows, schema)
+    return local_frame(spark, all_rows, RAW_POPULATION)
 
 
 def ingest_country_metadata(

@@ -118,24 +118,11 @@ def load_table(
     return df
 
 
-def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-evolution-tolerant parquet read: ``mergeSchema`` unions
-    the schemas of all files, so rows written before a column existed
-    surface it as NULL instead of failing the read — the contract a
-    long-lived warehouse table needs when the pipeline adds columns.
-    Costs a footer read per file (why it is not the default reader);
-    at scale, prefer an explicit evolved StructType once the schema
-    settles."""
-    return spark.read.option("mergeSchema", "true").parquet(path)
-
-
-def read_csv(
-    spark: SparkSession, path: str, schema: T.StructType, header: bool = True
-) -> DataFrame:
-    """S5/S6 — CSV scan with declared schema (reference:
+def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """S5/S6 — CSV scan with declared schema and a header row (reference:
     ``pandas.read_csv`` at ``crime_immigration_etl.py:144-148``,
     ``map-making/create-maps.py:11``)."""
-    return spark.read.schema(schema).csv(path, header=header)
+    return spark.read.schema(schema).csv(path, header=True)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:

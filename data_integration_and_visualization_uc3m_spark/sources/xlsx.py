@@ -1,14 +1,14 @@
 """XLSX ingest bridge (SURVEY.md §2.1, S4).
 
 PySpark has no core XLSX reader; the idiomatic bridge is a driver-side
-parse → ``spark.createDataFrame`` (Arrow path). The reference reads
-with the real header on spreadsheet row 3 (``header=2``,
-``crime_immigration_etl.py:136-142``).
+parse → an Arrow-built local relation (``readers.local_frame``). The
+reference reads with the real header on spreadsheet row 3
+(``header=2``, ``crime_immigration_etl.py:136-142``).
 
 One parser: an .xlsx is a zip of XML parts, so ``zipfile`` +
 ``xml.etree`` read the worksheet directly (shared strings, inline
 strings, numbers, booleans). No third-party deps, so S4 always
-executes; the frame reaches Spark through pandas + Arrow.
+executes; the frame reaches Spark as a ``LocalTableScan``.
 
 For many/huge XLSX files at scale, distribute by file: parallelize the
 path list and parse per-partition with the stdlib parser (pure-python,
@@ -23,6 +23,8 @@ import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from .readers import local_frame
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 
@@ -177,23 +179,25 @@ def write_xlsx(rows: list[list], path: str, sheet_name: str = "Sheet1") -> None:
 def read_xlsx(
     spark: SparkSession,
     path: str,
+    schema: T.StructType,
     header_row: int = 0,
-    schema: T.StructType | None = None,
 ) -> DataFrame:
     """S4 — XLSX scan with header offset (header_row=2 ⇒ spreadsheet
     row 3, matching pandas ``header=2``; crime_immigration_etl.py:141),
-    parsed by :func:`parse_xlsx_rows`. A ``header_row`` past the last
-    row raises :class:`XlsxUnavailable`."""
-    import pandas as pd
-
+    parsed by :func:`parse_xlsx_rows`. The rows under the header become
+    a local relation (``readers.local_frame``) with the declared
+    ``schema``; a header-only sheet gives the empty frame. A
+    ``header_row`` past the last row, or a schema field the header row
+    lacks, raises :class:`XlsxUnavailable`."""
     rows = parse_xlsx_rows(path)
     if header_row >= len(rows):
         raise XlsxUnavailable(
             f"header_row={header_row} beyond sheet ({len(rows)} rows)"
         )
     header = [str(c) for c in rows[header_row]]
-    pdf = pd.DataFrame(rows[header_row + 1:], columns=header)
-    if schema is not None:
-        pdf = pdf[[f.name for f in schema.fields]]
-        return spark.createDataFrame(pdf, schema)
-    return spark.createDataFrame(pdf)
+    missing = [f.name for f in schema.fields if f.name not in header]
+    if missing:
+        raise XlsxUnavailable(f"header row {header_row} lacks {missing}")
+    return local_frame(
+        spark, [dict(zip(header, r)) for r in rows[header_row + 1:]], schema
+    )

@@ -26,12 +26,6 @@ def test_normalize_string_idempotent(spark):
     assert once[2].n is None
 
 
-def test_normalize_whitespace_collapses_runs(spark):
-    df = one_col(spark, ["a   b\t c", " x  y "])
-    got = [r.n for r in df.select(cleaning.normalize_whitespace("v").alias("n")).collect()]
-    assert got == ["a b c", "x y"]
-
-
 def test_coerce_numeric_null_on_garbage(spark):
     # to_numeric(errors="coerce") parity: whitespace, exponent, garbage
     df = one_col(spark, ["42", " 7 ", "1.5e6", "n/a", "", None, "-3.25"])

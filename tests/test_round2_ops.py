@@ -15,6 +15,10 @@ def _vecs(spark, rows):
     )
 
 
+def _query(spark, vec):
+    return spark.createDataFrame([(vec,)], "embedding array<float>")
+
+
 class TestCosinePairsBlocked:
     def test_identical_vectors_same_block(self, spark):
         df = _vecs(
@@ -61,7 +65,8 @@ class TestIvfTopk:
                 (6, [-0.9, -0.1], 2),
             ],
         )
-        out = similarity.ivf_topk(df, [1.0, 0.0], k=10, nprobe=2).collect()
+        q = _query(spark, [1.0, 0.0])
+        out = similarity.ivf_topk_rel(df, q, k=10, nprobe=2).collect()
         # cell 2 (opposite direction) must not be probed
         assert {r.label for r in out} == {0, 1}
         # exact cosine ordering inside the probed cells, id tiebreak
@@ -69,7 +74,8 @@ class TestIvfTopk:
 
     def test_k_limits_output(self, spark):
         df = _vecs(spark, [(i, [1.0, float(i) / 100], 0) for i in range(10)])
-        assert similarity.ivf_topk(df, [1.0, 0.0], k=4, nprobe=1).count() == 4
+        q = _query(spark, [1.0, 0.0])
+        assert similarity.ivf_topk_rel(df, q, k=4, nprobe=1).count() == 4
 
     def test_centroids_fixed_point_exact(self, spark):
         df = _vecs(spark, [(1, [0.5, 0.25], 0), (2, [0.5, 0.75], 0)])

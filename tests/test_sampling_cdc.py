@@ -110,13 +110,6 @@ class TestSnapshotDiff:
         diff = cdc.snapshot_diff(old, new, keys=["k"], compare_cols=["v", "x"])
         assert diff.collect()[0].change_type == "unchanged"
 
-    def test_changes_only_drops_unchanged(self, spark):
-        old = self._snap(spark, [(1, "a", 1.0), (2, "b", 2.0)])
-        new = self._snap(spark, [(1, "a", 1.0), (2, "B", 2.0)])
-        diff = cdc.snapshot_diff(old, new, keys=["k"], compare_cols=["v", "x"])
-        only = cdc.changes_only(diff)
-        assert [r.k for r in only.collect()] == [2]
-
     def test_old_new_values_exposed(self, spark):
         old = self._snap(spark, [(1, "a", 1.0)])
         new = self._snap(spark, [(1, "z", 9.0)])

@@ -313,8 +313,13 @@ def test_semdedup_flags_within_cluster_near_dup_keep_lowest(spark):
         (4, [0.0, 0.0]),
     ]
     e = vecs(spark, rows)
-    seeds = [[1.0, 0.0], [0.0, 1.0]]
-    got = {r.vec_id: r for r in similarity.semdedup(e, seeds, threshold=0.95).collect()}
+    codebook = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "c int, centroid array<double>"
+    )
+    got = {
+        r.vec_id: r
+        for r in similarity.semdedup_rel(e, codebook, threshold=0.95).collect()
+    }
     assert set(got) == {1, 2, 3}  # zero vector dropped
     assert got[1].cluster == 0 and got[2].cluster == 0 and got[3].cluster == 1
     assert not got[1].is_dup  # lowest id survives
@@ -335,26 +340,61 @@ def test_pq_codes_and_adc_small_example(spark):
         (4, [0.0, 0.1, 0.1, 0.0]),   # sub0→seed0, sub1→seed1
     ]
     e = vecs(spark, rows)
-    got = {r.vec_id: (r.c0, r.c1) for r in similarity.pq_codes(e, seeds, m=2).collect()}
+    codebook = spark.createDataFrame(
+        list(enumerate(seeds)), "c int, centroid array<double>"
+    )
+    got = {
+        r.vec_id: (r.c0, r.c1)
+        for r in similarity.pq_codes_rel(e, codebook, m=2, dim=4).collect()
+    }
     assert got[0] == (0, 0) and got[1] == (1, 1)
     assert got[2] == (0, 0) and got[3] == (1, 1)
     assert got[4] == (0, 1)
     # ADC with query = seed0: seed0-coded vectors rank first
-    top = similarity.pq_adc_topk(e, seeds, seeds[0], k=5, m=2).collect()
+    q = spark.createDataFrame([(seeds[0],)], "embedding array<float>")
+    top = similarity.pq_adc_topk_rel(
+        e, codebook, q, k=5, m=2, dim=4, n_centroids=2
+    ).collect()
     order = [r.vec_id for r in top]
     assert order[0] in (0, 2) and set(order[:2]) == {0, 2}
     assert top[0].adc_dist_nano == 0  # exact codebook hit
     assert order[-1] in (1, 3)
 
 
-def test_semdedup_rejects_zero_norm_seed(spark):
+def test_semdedup_rel_assigns_nothing_to_zero_norm_centroid(spark):
+    """Cosine to a zero-norm centroid is 0/0 = NaN, which would win
+    every argmax; the codebook filter keeps it out of the assignment."""
+    from data_integration_and_visualization_uc3m_spark.operators import similarity
+
+    e = vecs(spark, [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.7, 0.3])])
+    codebook = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0])],
+        "c int, centroid array<double>",
+    )
+    got = {
+        r.vec_id: r.cluster
+        for r in similarity.semdedup_rel(e, codebook, threshold=0.95).collect()
+    }
+    assert got == {1: 1, 2: 2, 3: 1}
+
+
+def test_pq_adc_topk_rel_rejects_gapped_codebook(spark):
+    """Lookups index the distance table positionally, so centroid ids
+    must be 0..n_centroids-1; ids 0 and 2 fail the guard instead of
+    returning shifted distances."""
     import pytest
 
     from data_integration_and_visualization_uc3m_spark.operators import similarity
 
-    e = vecs(spark, [(1, [1.0, 0.0])])
-    with pytest.raises(ValueError, match="zero norm"):
-        similarity.semdedup(e, [[1.0, 0.0], [0.0, 0.0]])
+    e = vecs(spark, [(1, [0.0, 0.0, 1.0, 1.0]), (2, [1.0, 1.0, 0.0, 0.0])])
+    codebook = spark.createDataFrame(
+        [(0, [0.0, 0.0, 1.0, 1.0]), (2, [1.0, 1.0, 0.0, 0.0])],
+        "c int, centroid array<double>",
+    )
+    q = spark.createDataFrame([([0.0, 0.0, 1.0, 1.0],)], "embedding array<float>")
+    top = similarity.pq_adc_topk_rel(e, codebook, q, k=2, m=2, dim=4, n_centroids=2)
+    with pytest.raises(Exception, match="contiguous centroid ids"):
+        top.collect()
 
 
 def test_maxsim_topk_ranks_passage_matches(spark):

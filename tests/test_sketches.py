@@ -58,7 +58,10 @@ def test_bloom_prefilter_is_superset_of_true_join(spark):
     members = _keys(spark, list(range(0, 1000, 17)))
     probe = _keys(spark, list(range(500)))
     bits = sketches.bloom_build(members, "k", n_bits=2048, k=3)
-    kept = {r.k for r in sketches.bloom_prefilter(probe, "k", bits, n_bits=2048, k=3).collect()}
+    kept = {
+        r.k
+        for r in sketches.bloom_pass_keys(probe, "k", bits, n_bits=2048, k=3).collect()
+    }
     true = {r.k for r in probe.join(members, "k", "left_semi").collect()}
     assert true <= kept  # one-sided error
     # and the filter actually prunes something at this density

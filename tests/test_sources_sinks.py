@@ -6,12 +6,15 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import types as T
 
 from data_integration_and_visualization_uc3m_spark.sinks import writers
 from data_integration_and_visualization_uc3m_spark.sources import api
 from data_integration_and_visualization_uc3m_spark.sources.readers import year_dim
 
 SF = "/root/testdata/sf0.001"
+
+ISO3 = T.StructType([T.StructField("Iso3_code", T.StringType())])
 
 
 def wb_row(iso3, name, value):
@@ -135,7 +138,7 @@ def test_xlsx_bridge_header_offset(spark, tmp_path):
 
     p = str(tmp_path / "t.xlsx")
     write_xlsx([["junk1"], ["junk2"], ["Iso3_code"], ["ESP"]], p)
-    df = read_xlsx(spark, p, header_row=2)
+    df = read_xlsx(spark, p, ISO3, header_row=2)
     assert df.columns == ["Iso3_code"]
     assert [r.Iso3_code for r in df.collect()] == ["ESP"]
 
@@ -149,10 +152,40 @@ def test_xlsx_header_row_beyond_sheet_raises(spark, tmp_path):
 
     p = str(tmp_path / "short.xlsx")
     write_xlsx([["junk1"], ["Iso3_code"], ["ESP"]], p)
-    assert read_xlsx(spark, p, header_row=1).columns == ["Iso3_code"]
+    assert read_xlsx(spark, p, ISO3, header_row=1).columns == ["Iso3_code"]
     beyond = r"header_row=3 beyond sheet \(3 rows\)"
     with pytest.raises(XlsxUnavailable, match=beyond):
-        read_xlsx(spark, p, header_row=3)
+        read_xlsx(spark, p, ISO3, header_row=3)
+
+
+def test_xlsx_header_only_sheet_is_empty_frame(spark, tmp_path):
+    """A sheet whose last row is the header reads as the empty frame
+    with the declared schema."""
+    from data_integration_and_visualization_uc3m_spark.sources.xlsx import (
+        read_xlsx, write_xlsx,
+    )
+
+    p = str(tmp_path / "empty.xlsx")
+    write_xlsx([["junk1"], ["Iso3_code"]], p)
+    df = read_xlsx(spark, p, ISO3, header_row=1)
+    assert df.schema == ISO3
+    assert df.collect() == []
+
+
+def test_xlsx_schema_field_missing_from_header_raises(spark, tmp_path):
+    """A declared field the header row lacks is the typed error, not
+    a silently NULL column."""
+    from data_integration_and_visualization_uc3m_spark.sources.xlsx import (
+        XlsxUnavailable, read_xlsx, write_xlsx,
+    )
+
+    p = str(tmp_path / "narrow.xlsx")
+    write_xlsx([["Iso3_code"], ["ESP"]], p)
+    schema = T.StructType(
+        [*ISO3.fields, T.StructField("Year", T.IntegerType())]
+    )
+    with pytest.raises(XlsxUnavailable, match=r"lacks \['Year'\]"):
+        read_xlsx(spark, p, schema)
 
 
 def test_xlsx_stdlib_parser_types_and_gaps(spark, tmp_path):
@@ -177,7 +210,12 @@ def test_xlsx_stdlib_parser_types_and_gaps(spark, tmp_path):
     assert rows[2] == ["FRA", None, False]
     assert rows[3] == ["DEU", 83, True]  # integral float → int
 
-    df = xlsx.read_xlsx(spark, p, header_row=0)
+    schema = T.StructType([
+        T.StructField("code", T.StringType()),
+        T.StructField("val", T.DoubleType()),
+        T.StructField("flag", T.BooleanType()),
+    ])
+    df = xlsx.read_xlsx(spark, p, schema)
     assert df.columns == ["code", "val", "flag"]
     got = {r.code: r for r in df.collect()}
     assert got["DEU"].val == 83.0 and got["ESP"].flag is True
@@ -277,25 +315,33 @@ def test_write_partitioned_sorted_layout_and_pruning(spark, tmp_path):
     assert back.filter(F.col("lang") == "en").count() == 100
 
 
-def test_parquet_schema_evolution_merge(spark, tmp_path):
+def test_parquet_schema_evolution_merge(spark):
     # files written before a column existed must read back with NULLs,
-    # not fail — the long-lived-table contract
-    from data_integration_and_visualization_uc3m_spark.sources.readers import (
-        read_parquet_evolved,
-    )
+    # not fail — the long-lived-table contract. The registered query
+    # writes even-keyed orders without o_totalprice, odd-keyed with it,
+    # and reads both back with mergeSchema.
+    from pyspark.sql import functions as F
 
-    path = str(tmp_path / "tbl")
-    spark.createDataFrame([(1, "a")], "id long, name string").write.mode(
-        "append"
-    ).parquet(path)
-    spark.createDataFrame(
-        [(2, "b", 9.5)], "id long, name string, score double"
-    ).write.mode("append").parquet(path)
+    from data_integration_and_visualization_uc3m_spark import queries as Q
+    from data_integration_and_visualization_uc3m_spark.sources.readers import load_table
 
-    got = read_parquet_evolved(spark, path)
-    assert sorted(got.columns) == ["id", "name", "score"]
-    rows = {r.id: (r.name, r.score) for r in got.collect()}
-    assert rows == {1: ("a", None), 2: ("b", 9.5)}
+    got = {
+        r.o_orderstatus: r
+        for r in Q.REGISTRY["schema_evolution_union"].fn(spark, SF).collect()
+    }
+    want = {
+        r.o_orderstatus: (r.n, r.n_odd)
+        for r in load_table(spark, SF, "orders")
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.col("o_orderkey") % 2 == 1, 1)).alias("n_odd"),
+        )
+        .collect()
+    }
+    assert {s: (r.n_rows, r.n_with_price) for s, r in got.items()} == want
+    for r in got.values():
+        assert r.n_with_price < r.n_rows  # old-batch rows NULL-fill the column
 
 
 def test_orc_roundtrip(spark, tmp_path):
@@ -669,50 +715,6 @@ def test_jsonl_dir_overwrite_publishes_manifest_before_sweep(tmp_path, monkeypat
         assert os.path.exists(part_path)
         with open(part_path, encoding="utf-8") as fh:
             assert json.loads(fh.readline())["id"] == 1
-
-
-def test_overwrite_partitions_replaces_only_touched(spark, tmp_path):
-    """Dynamic partition overwrite: re-landing one partition replaces
-    exactly that partition; untouched partitions keep their rows, and
-    the write is idempotent per partition. Contrast pinned against
-    static overwrite (the session default), which truncates the whole
-    table."""
-    from data_integration_and_visualization_uc3m_spark.sinks.writers import (
-        overwrite_partitions,
-        write_parquet_snapshot,
-    )
-
-    out = str(tmp_path / "fact")
-    base = spark.createDataFrame(
-        [(2021, 1, 10.0), (2021, 2, 20.0), (2022, 3, 30.0)],
-        "year int, k int, v double",
-    )
-    overwrite_partitions(base, out, ["year"])
-
-    patch = spark.createDataFrame(
-        [(2022, 3, 99.0), (2022, 4, 44.0)], "year int, k int, v double"
-    )
-    overwrite_partitions(patch, out, ["year"])
-    got = {
-        (r.year, r.k): r.v for r in spark.read.parquet(out).collect()
-    }
-    # 2021 untouched, 2022 fully replaced by the patch
-    assert got == {(2021, 1): 10.0, (2021, 2): 20.0,
-                   (2022, 3): 99.0, (2022, 4): 44.0}
-
-    # idempotent: re-landing the same patch changes nothing
-    overwrite_partitions(patch, out, ["year"])
-    again = {
-        (r.year, r.k): r.v for r in spark.read.parquet(out).collect()
-    }
-    assert again == got
-
-    # contrast: static overwrite truncates everything else
-    write_parquet_snapshot(patch, out, ["year"])
-    trunc = {
-        (r.year, r.k): r.v for r in spark.read.parquet(out).collect()
-    }
-    assert trunc == {(2022, 3): 99.0, (2022, 4): 44.0}
 
 
 def test_jsonl_dir_stream_writer_per_epoch_manifests(spark, tmp_path):

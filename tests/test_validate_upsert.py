@@ -38,12 +38,6 @@ def test_range_violations_null_counts_as_violation(spark):
     assert sorted([r.v for r in got], key=lambda x: (x is None, x)) == [-1.0, None]
 
 
-def test_code_length_violations(spark):
-    df = spark.createDataFrame([("ESP",), ("ES",), (None,)], "code string")
-    got = validate.code_length_violations(df, "code", 3).collect()
-    assert len(got) == 2
-
-
 def test_upsert_conflict_ignore_semantics(spark):
     target = spark.createDataFrame(
         [("ESP", 2019, 100), ("FRA", 2019, 200)], "k string, y int, v long"
