@@ -18,6 +18,9 @@ shuffle the fact side.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from ..sources.readers import local_frame
 
 # (nationkey, iso3, lon, lat) — TPC-H nation-key order; approximate
 # country centroids in decimal degrees.
@@ -52,9 +55,14 @@ NATION_POSITIONS: tuple[tuple[int, str, float, float], ...] = (
 
 def positions_relation(spark: SparkSession) -> DataFrame:
     """Broadcast-sized ``(nationkey, iso3, lon, lat)`` relation."""
-    return spark.createDataFrame(
-        list(NATION_POSITIONS),
-        "nationkey bigint, iso3 string, lon double, lat double",
+    schema = T.StructType([
+        T.StructField("nationkey", T.LongType()),
+        T.StructField("iso3", T.StringType()),
+        T.StructField("lon", T.DoubleType()),
+        T.StructField("lat", T.DoubleType()),
+    ])
+    return local_frame(
+        spark, [dict(zip(schema.names, r)) for r in NATION_POSITIONS], schema
     )
 
 

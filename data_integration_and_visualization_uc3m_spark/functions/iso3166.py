@@ -23,6 +23,9 @@ extra aliases — they are not ISO 3166-1 codes but appear in Eurostat
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from ..sources.readers import local_frame
 
 # (alpha2, alpha3, name, official_name | None) — ISO 3166-1, public data.
 # Names follow the ISO short-name convention pycountry exposes as
@@ -306,9 +309,10 @@ def alias_rows() -> list[tuple[str, str, str]]:
 def alias_relation(spark: SparkSession) -> DataFrame:
     """The universe as a broadcast-sized lookup relation
     ``(alias, iso3, canonical_name)`` (~750 rows, a few KB)."""
-    return spark.createDataFrame(
-        alias_rows(), "alias string, iso3 string, canonical_name string"
+    schema = T.StructType(
+        [T.StructField(c, T.StringType()) for c in ("alias", "iso3", "canonical_name")]
     )
+    return local_frame(spark, [dict(zip(schema.names, r)) for r in alias_rows()], schema)
 
 
 def alias_values_sql() -> str:

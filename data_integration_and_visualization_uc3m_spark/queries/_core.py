@@ -46,7 +46,7 @@ from ..operators import (
 from ..functions import geo, iso3166
 from ..operators._overlap import overlap
 from ..scratch import scratch_dir
-from ..sources.readers import load_table, synthetic_dim as readers_synthetic_dim
+from ..sources.readers import load_table, local_frame, synthetic_dim as readers_synthetic_dim
 from ..session import tune
 
 DEC2 = "decimal(18,2)"

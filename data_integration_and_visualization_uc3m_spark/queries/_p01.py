@@ -238,14 +238,18 @@ def lookup_join_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     (COUNTRIES_MAP.get(k, default), etl:31-34): unmatched keys pass
     through unchanged via coalesce, not null."""
     n = _t(spark, sf_dir, "nation")
-    lookup = spark.createDataFrame(
+    lookup = local_frame(
+        spark,
         [
-            ("france", "french republic"),
-            ("germany", "federal republic of germany"),
-            ("japan", "state of japan"),
-            ("unmatched-alias", "never hit"),
+            {"alias": "france", "canonical": "french republic"},
+            {"alias": "germany", "canonical": "federal republic of germany"},
+            {"alias": "japan", "canonical": "state of japan"},
+            {"alias": "unmatched-alias", "canonical": "never hit"},
         ],
-        "alias string, canonical string",
+        T.StructType([
+            T.StructField("alias", T.StringType()),
+            T.StructField("canonical", T.StringType()),
+        ]),
     )
     out = joins.lookup_join_with_fallback(
         n, lookup, cleaning.normalize_string("n_name"), "canonical_name"

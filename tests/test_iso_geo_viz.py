@@ -3,6 +3,7 @@ trace/point specs, live Derby JDBC round-trip."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_integration_and_visualization_uc3m_spark.functions import geo, iso3166
@@ -60,6 +61,21 @@ def test_alias_lookup_fallback_semantics(spark):
 def test_positions_cover_all_nation_keys(spark):
     assert [k for k, _, _, _ in geo.NATION_POSITIONS] == list(range(25))
     assert geo.positions_relation(spark).count() == 25
+
+
+@pytest.mark.parametrize("name", [
+    "lookup_join_fallback", "country_alias_normalize",
+    "scattergeo_trace_specs", "viz_point_specs",
+])
+def test_lookup_queries_scan_local_relations(spark, name):
+    # A lookup built with createDataFrame(list) plans ExistingRDD, a
+    # Python-RDD scan that starts Python workers on every execution.
+    from data_integration_and_visualization_uc3m_spark.queries import REGISTRY
+
+    df = REGISTRY[name].fn(spark, SF)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
 
 
 def test_scattergeo_trace_specs(spark):

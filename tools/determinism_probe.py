@@ -24,9 +24,11 @@ tests/test_streaming.py).
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # Queries chosen for maximum partitioning surface: multi-stage float
 # fixed-point chains, window moments, weighted self-joins, sketches

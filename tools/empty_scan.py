@@ -15,9 +15,11 @@ Exit 1 if any non-allowlisted query is empty.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # Queries that SHOULD be empty on healthy data (audits whose rows are
 # violations). Keep this list justified — every entry is a query whose

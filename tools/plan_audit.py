@@ -29,7 +29,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # Queries with a DELIBERATE global window (documented single-partition
 # top-of-report slices — SURVEY §7.4.6).

@@ -9,9 +9,11 @@ Regenerate after plan-affecting changes: python tools/plan_snapshot.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 HEADLINE = [
     "pricing_summary", "flagship_nation_year_rate", "validated_m2o_join",
@@ -78,7 +80,7 @@ def main() -> None:
             df._jdf.queryExecution(), "formatted"
         )
         out.append(f"## {name}\n\n```\n{plan.rstrip()}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"PLANS.md written: {len(HEADLINE)} plans @ {sf_dir}")
 

@@ -25,14 +25,14 @@ Usage: python tools/preflight.py            # smoke + focused parity
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SMOKE = r"""
-import sys
-sys.path.insert(0, "/root/repo")
 from pyspark.sql import SparkSession
 spark = SparkSession.builder.master("local[8]").getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
@@ -48,7 +48,7 @@ print(f"SMOKE OK: {len(qs)} queries, entry rows={len(rows)}")
 def main() -> None:
     print("[1/2] cold-import smoke (subprocess)...")
     r = subprocess.run(
-        [sys.executable, "-c", SMOKE], capture_output=True, text=True
+        [sys.executable, "-c", SMOKE], capture_output=True, text=True, cwd=ROOT
     )
     tail = (r.stdout.strip().splitlines() or [""])[-1]
     if r.returncode != 0:
@@ -72,7 +72,7 @@ def main() -> None:
     print(f"[2/2] focused parity on {len(focus)} pinned/new queries...")
     r = subprocess.run(
         [sys.executable, "tools/parity.py", "/root/testdata/sf0.01", *focus],
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     if r.returncode != 0:
         sys.exit(1)

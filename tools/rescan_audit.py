@@ -29,9 +29,10 @@ import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-OUT = "/root/repo/RESCAN_AUDIT.json"
+OUT = os.path.join(ROOT, "RESCAN_AUDIT.json")
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",

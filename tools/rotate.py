@@ -26,7 +26,8 @@ import re
 import sys
 import textwrap
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def _passed(v) -> bool:

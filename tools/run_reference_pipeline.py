@@ -34,7 +34,8 @@ import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 EUROSTAT_CSV = "/root/reference/data-sources/tps00176_linear_2_0.csv"
 URL = "jdbc:derby:memory:sg_pipeline;create=true"

@@ -36,10 +36,11 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-DETAIL = "/root/repo/BENCH_DETAIL.json"
+DETAIL = os.path.join(ROOT, "BENCH_DETAIL.json")
 WATERMARK = "45 minutes"
 GAP = "30 minutes"
 SLICE_DAYS = 2
