@@ -44,18 +44,15 @@ def validated_join(
     fact: DataFrame,
     dim: DataFrame,
     on: list[str],
-    how: str = "inner",
-    validate_unique: bool = True,
 ) -> DataFrame:
-    """J1 — equi-join with many-to-one validation.
+    """J1 — inner equi-join with many-to-one validation.
 
     Reference: ``immig.merge(population, on=[...], how="inner",
     validate="many_to_one")`` at ``crime_immigration_etl.py:284-289`` —
     enriches a fact with a dimension while semi-filtering to known keys.
     """
-    if validate_unique:
-        assert_unique_keys(dim, on, side="dim")
-    return fact.join(F.broadcast(dim), on=on, how=how)
+    assert_unique_keys(dim, on, side="dim")
+    return fact.join(F.broadcast(dim), on=on, how="inner")
 
 
 def lookup_join_with_fallback(

@@ -81,7 +81,8 @@ def load_with_metrics(
     return the quality counters observed during that same write — one
     scan total. The caller decides whether a non-zero violation
     counter invalidates the load (the K3 job-atomic file commit means
-    an abort-on-violation can simply not publish the output)."""
+    an abort-on-violation can simply not publish the output, as
+    ``plans.star.run_pass`` does with its staged snapshots)."""
     instrumented, obs = observed_quality(df, not_null_cols, range_checks)
     instrumented.write.format(fmt).mode(mode).save(path)
     return dict(obs.get)

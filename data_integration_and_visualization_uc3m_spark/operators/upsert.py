@@ -247,13 +247,12 @@ def _commit_manifest(root: str, new_name: str, expect: str | None) -> str:
     return new_name
 
 
-def _commit_snapshot(root: str, df: DataFrame, expect: str | None) -> str:
-    """Write ``df`` to a fresh snapshot dir, then flip the manifest to
-    it guarded on ``expect`` (step 1 + step 2 of the protocol above).
-    Returns the committed snapshot name."""
+def _write_snapshot(root: str, df: DataFrame) -> str:
+    """Write ``df`` to a fresh snapshot dir (step 1 of the protocol
+    above) and return its name; nothing reads it until a flip."""
     new_name = _next_snapshot_name(root)
     df.write.mode("overwrite").parquet(os.path.join(root, new_name))
-    return _commit_manifest(root, new_name, expect)
+    return new_name
 
 
 def current_snapshot(root: str) -> str | None:
@@ -275,6 +274,26 @@ def read_upsert_parquet(spark: SparkSession, root: str) -> DataFrame:
     return spark.read.parquet(os.path.join(root, _live_snapshot(root)))
 
 
+def _merged(
+    root: str,
+    batch: DataFrame,
+    keys: list[str],
+    order_by: list[str] | None,
+    mode: str = "ignore",
+) -> tuple[DataFrame, str | None]:
+    """The table's next snapshot — the live one merged with ``batch``
+    (the deduped batch alone on an empty table) — and the live name
+    the flip must be guarded on."""
+    if mode not in ("ignore", "replace"):
+        raise ValueError(f"mode must be 'ignore' or 'replace', got {mode!r}")
+    cur = current_snapshot(root)
+    if cur is None:
+        return dedup_batch_first_wins(batch, keys, order_by), None
+    target = batch.sparkSession.read.parquet(os.path.join(root, cur))
+    merge = upsert_ignore if mode == "ignore" else upsert_replace
+    return merge(target, batch, keys, order_by), cur
+
+
 def write_upsert_parquet(
     root: str,
     batch: DataFrame,
@@ -287,17 +306,8 @@ def write_upsert_parquet(
     ``mode="replace"`` = last-write-wins (MERGE ... THEN UPDATE).
     Returns the committed snapshot name. Idempotent either way:
     re-running with the same batch commits identical contents."""
-    if mode not in ("ignore", "replace"):
-        raise ValueError(f"mode must be 'ignore' or 'replace', got {mode!r}")
-    spark = batch.sparkSession
-    cur = current_snapshot(root)
-    if cur is None:
-        merged = dedup_batch_first_wins(batch, keys, order_by)
-    else:
-        target = spark.read.parquet(os.path.join(root, cur))
-        merge = upsert_ignore if mode == "ignore" else upsert_replace
-        merged = merge(target, batch, keys, order_by)
-    return _commit_snapshot(root, merged, expect=cur)
+    merged, cur = _merged(root, batch, keys, order_by, mode)
+    return _commit_manifest(root, _write_snapshot(root, merged), expect=cur)
 
 
 def delete_keys_parquet(
@@ -319,7 +329,7 @@ def delete_keys_parquet(
     remaining = target.join(
         F.broadcast(tombstones.select(*keys).distinct()), keys, "left_anti"
     )
-    return _commit_snapshot(root, remaining, expect=cur)
+    return _commit_manifest(root, _write_snapshot(root, remaining), expect=cur)
 
 
 def compact_snapshot(
@@ -355,7 +365,7 @@ def compact_snapshot(
     df = spark.read.parquet(src).coalesce(n_files)
     # expect=cur: if an upsert committed while we rewrote, abort the
     # flip instead of silently dropping its rows from the live table
-    return _commit_snapshot(root, df, expect=cur)
+    return _commit_manifest(root, _write_snapshot(root, df), expect=cur)
 
 
 def vacuum(root: str, keep_last: int = 3) -> list[str]:

@@ -8,10 +8,14 @@ broadcast join; constraints are validation operators.
 
 The transforms take raw-shaped DataFrames (schemas.RAW_*) so unit tests
 feed adversarial fixtures (FIXTURES.md) and golden-test the outputs.
+:func:`run_pass` is the pass's one entry point: it stages the star,
+validates what it staged, and publishes only when clean.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -20,15 +24,13 @@ from pyspark.sql import types as T
 
 from ..functions import iso3166
 from ..operators import cleaning, filters, joins, upsert
-from ..schemas import FOREIGN_KEYS, LOAD_ORDER, NATURAL_KEYS, YEARS
-from ..sources.readers import local_frame
+from ..schemas import FOREIGN_KEYS, LOAD_ORDER, NATURAL_KEYS, ORDER_BY, YEARS
+from ..sources.readers import local_frame, year_dim
 
 # ISO2 → ISO3 lookup over the FULL ISO 3166-1 universe (the pycountry
 # analog the reference builds in crime_immigration_etl.py:16-28), incl.
 # the Eurostat quirks it handles via country_converter (etl:271-276):
-# EL → GRC (Greece), UK → GBR. Rounds 1-7 carried only 35 European
-# codes, so non-European Eurostat input silently took the J2 fallback;
-# functions/iso3166.py restores all 249 countries.
+# EL → GRC (Greece), UK → GBR.
 ISO2_TO_ISO3 = {a2: a3 for a2, a3, _, _ in iso3166.COUNTRIES}
 ISO2_TO_ISO3.update(
     {alias.upper(): a3 for alias, a3 in iso3166.EXTRA_ALIASES}
@@ -152,8 +154,6 @@ def transform_immigration(
         df,
         population.select("country_iso3_id", "year_id", "population"),
         on=["country_iso3_id", "year_id"],
-        how="inner",
-        validate_unique=True,
     )
     return enriched.select(
         cleaning.round_half_up(
@@ -216,6 +216,66 @@ def validate_star(tables: dict[str, DataFrame]) -> dict[str, int]:
                 )
     row = groups.agg(*aggs).first()
     return {k: int(v) for k, v in row.asDict().items()}
+
+
+class StarViolation(ValueError):
+    """A staged star broke a constraint; ``report`` has every counter."""
+
+    def __init__(self, report: dict[str, int]):
+        super().__init__(f"star not published, violations: {report}")
+        self.report = report
+
+
+def run_pass(
+    spark: SparkSession, sources: dict[str, DataFrame], root: str
+) -> dict[str, int]:
+    """One write-audit-publish pass of the star into the versioned
+    parquet warehouse ``root/<table>`` from the raw frames ``raw_pop``,
+    ``aggregates``, ``raw_crime`` and ``raw_immig`` — the reference's
+    constrained load (etl:314-380), all-or-nothing across the star.
+
+    Builds the five tables; stages each one's next snapshot (live ∪
+    batch, ON CONFLICT DO NOTHING, first-wins on ``ORDER_BY``, which
+    also absorbs the Eurostat feed repeating each (geo, year) per age
+    definition); runs ``validate_star`` over the staged parquet, the
+    bytes that would go live; and flips the five manifests only if
+    every counter is zero, returning the report. Otherwise it removes
+    its staged dirs (``vacuum`` keeps an orphan ahead of the live
+    snapshot as a write in flight) and raises :class:`StarViolation`.
+    One writer per warehouse, as per table."""
+    country, population = transform_country_and_population(
+        sources["raw_pop"], sources["aggregates"]
+    )
+    tables = {
+        "country": country,
+        "year": year_dim(spark),
+        "population": population,
+        "crime": transform_crime(sources["raw_crime"]),
+        "immigration": transform_immigration(
+            sources["raw_immig"], population, iso2_lookup(spark)
+        ),
+    }
+    staged = {}
+    try:
+        for name in LOAD_ORDER:
+            path = os.path.join(root, name)
+            merged, expect = upsert._merged(
+                path, tables[name], NATURAL_KEYS[name], ORDER_BY[name]
+            )
+            staged[name] = (path, upsert._write_snapshot(path, merged), expect)
+        report = validate_star({
+            name: spark.read.schema(tables[name].schema).parquet(os.path.join(path, snap))
+            for name, (path, snap, _) in staged.items()
+        })
+        if any(report.values()):
+            raise StarViolation(report)
+    except BaseException:
+        for path, snap, _ in staged.values():
+            shutil.rmtree(os.path.join(path, snap), ignore_errors=True)
+        raise
+    for path, snap, expect in staged.values():
+        upsert._commit_manifest(path, snap, expect)
+    return report
 
 
 def ddl_statements() -> list[str]:

@@ -278,7 +278,7 @@ def validated_m2o_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
     )
-    joined = joins.validated_join(l, o, on=["l_orderkey"], validate_unique=True)
+    joined = joins.validated_join(l, o, on=["l_orderkey"])
     one = F.lit(1).cast("decimal(3,2)")
     disc = F.col("l_discount").cast("decimal(4,2)")
     return joined.groupBy("o_orderpriority").agg(

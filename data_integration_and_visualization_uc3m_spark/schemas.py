@@ -5,7 +5,8 @@ The reference's most load-bearing artifact is its DDL
 NOT NULL / PK / FK / UNIQUE constraints. Spark has no native constraint
 enforcement, so the contract splits into two parts:
 
-1. the declared ``StructType`` here (shape + nullability intent), and
+1. the star's natural keys and FK graph here (its DDL, with the column
+   types and NOT NULLs, is ``plans.star.ddl_statements``), and
 2. the validation operators in :mod:`..operators.validate` (uniqueness,
    FK integrity, range plausibility), which return violation sets.
 
@@ -21,42 +22,6 @@ from pyspark.sql import types as T
 
 # --- Star schema (reference: database/initdb/schema.sql:23-105) -----------
 
-COUNTRY = T.StructType(
-    [
-        # VARCHAR(3) PK — schema.sql:24; length-3 enforced by validators.
-        T.StructField("country_iso3_id", T.StringType(), False),
-        T.StructField("country_name", T.StringType(), False),
-    ]
-)
-
-YEAR = T.StructType([T.StructField("year_id", T.IntegerType(), False)])
-
-POPULATION = T.StructType(
-    [
-        T.StructField("population", T.LongType(), False),  # BIGINT schema.sql:87
-        T.StructField("country_iso3_id", T.StringType(), False),
-        T.StructField("year_id", T.IntegerType(), False),
-    ]
-)
-
-CRIME = T.StructType(
-    [
-        # NUMERIC(10,2) — schema.sql:64; 2-decimal contract (etl:255).
-        T.StructField("convicts_per_100000", T.DecimalType(10, 2), False),
-        T.StructField("country_iso3_id", T.StringType(), False),
-        T.StructField("year_id", T.IntegerType(), False),
-    ]
-)
-
-IMMIGRATION = T.StructType(
-    [
-        # NUMERIC(10,2) — schema.sql:40; rate formula etl:292-294.
-        T.StructField("immigration_per_100000", T.DecimalType(10, 2), False),
-        T.StructField("country_iso3_id", T.StringType(), False),
-        T.StructField("year_id", T.IntegerType(), False),
-    ]
-)
-
 # Natural keys (UNIQUE constraints, schema.sql:57,81,104) — used by the
 # upsert sink and the uniqueness validators.
 NATURAL_KEYS = {
@@ -65,6 +30,16 @@ NATURAL_KEYS = {
     "population": ["country_iso3_id", "year_id"],
     "crime": ["country_iso3_id", "year_id"],
     "immigration": ["country_iso3_id", "year_id"],
+}
+
+# Columns that make each table's first-wins pick on its natural key
+# deterministic (the reference keeps pandas file order, etl:199-203).
+ORDER_BY = {
+    "country": ["country_name"],
+    "year": None,
+    "population": ["population"],
+    "crime": ["convicts_per_100000"],
+    "immigration": ["immigration_per_100000"],
 }
 
 # FK graph (schema.sql:44-54, 68-78, 91-101) + load order (etl:377-380).
@@ -121,17 +96,6 @@ RAW_CRIME = T.StructType(
 
 # Eurostat tps00176 linear CSV (only 3 of 24 columns consumed, etl:269).
 RAW_IMMIGRATION_CONSUMED = ["geo", "TIME_PERIOD", "OBS_VALUE"]
-
-# Viz egress shape (map-making/data.csv:1).
-VIZ_POINTS = T.StructType(
-    [
-        T.StructField("name", T.StringType(), True),
-        T.StructField("immigration", T.DoubleType(), True),
-        T.StructField("crime", T.DoubleType(), True),
-        T.StructField("lat", T.DoubleType(), True),
-        T.StructField("lon", T.DoubleType(), True),
-    ]
-)
 
 # --- Driver testdata (TESTDATA.md; TPC-H-ish + events/documents/embeddings)
 

@@ -5,11 +5,19 @@ including the rate formula (etl:292-294) and the 7-way slice
 
 from __future__ import annotations
 
+import os
 from decimal import Decimal
 
+import pytest
+from pyspark.sql import functions as F
+
+from data_integration_and_visualization_uc3m_spark.operators import upsert
 from data_integration_and_visualization_uc3m_spark.plans import star
-from data_integration_and_visualization_uc3m_spark.schemas import RAW_CRIME, RAW_POPULATION
-from data_integration_and_visualization_uc3m_spark.sources.readers import year_dim
+from data_integration_and_visualization_uc3m_spark.schemas import (
+    LOAD_ORDER,
+    RAW_CRIME,
+    RAW_POPULATION,
+)
 
 
 def raw_population(spark):
@@ -41,7 +49,7 @@ def test_country_population_golden(spark):
     assert p == {("ESP", 2019): 47000000, ("ESP", 2020): 47500000, ("FRA", 2019): 67000000}
 
 
-def test_crime_golden_seven_way_slice(spark):
+def raw_crime(spark):
     base = {
         "Category": "Total", "Sex": "Total", "Age": "Total",
         "Indicator": "Persons convicted",
@@ -56,16 +64,13 @@ def test_crime_golden_seven_way_slice(spark):
         dict(base, Iso3_code="PRT", Country="Portugal", Year=2019, VALUE="3.5", Sex="Male"),
         dict(base, Iso3_code="GRC", Country="Greece", Year=2019, VALUE="4.0", Region="Asia"),
     ]
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         [tuple(r[f.name] for f in RAW_CRIME.fields) for r in rows], RAW_CRIME
     )
-    got = {r.country_iso3_id: r.convicts_per_100000 for r in star.transform_crime(df).collect()}
-    # only ESP survives; 8.125 rounds HALF_UP to 8.13 (not pandas' 8.12)
-    assert got == {"ESP": Decimal("8.13")}
 
 
-def test_immigration_golden_rate(spark):
-    raw = spark.createDataFrame(
+def raw_immigration(spark):
+    return spark.createDataFrame(
         [
             ("ES", 2019, "94000"),       # → ESP
             ("EL", 2019, ":"),           # Eurostat quirk code + missing marker → 0
@@ -75,6 +80,17 @@ def test_immigration_golden_rate(spark):
         ],
         "geo string, TIME_PERIOD int, OBS_VALUE string",
     )
+
+
+def test_crime_golden_seven_way_slice(spark):
+    df = raw_crime(spark)
+    got = {r.country_iso3_id: r.convicts_per_100000 for r in star.transform_crime(df).collect()}
+    # only ESP survives; 8.125 rounds HALF_UP to 8.13 (not pandas' 8.12)
+    assert got == {"ESP": Decimal("8.13")}
+
+
+def test_immigration_golden_rate(spark):
+    raw = raw_immigration(spark)
     population = spark.createDataFrame(
         [("ESP", 2019, 47000000), ("GRC", 2019, 10700000), ("FRA", 2019, 67000000)],
         "country_iso3_id string, year_id int, population long",
@@ -89,35 +105,74 @@ def test_immigration_golden_rate(spark):
     }
 
 
+def raw_sources(spark, crime=None):
+    return {
+        "raw_pop": raw_population(spark),
+        "aggregates": spark.createDataFrame([("WLD",)], "code string"),
+        "raw_crime": crime if crime is not None else raw_crime(spark),
+        "raw_immig": raw_immigration(spark),
+    }
+
+
+def live_rows(spark, root):
+    return {
+        name: sorted(map(tuple, upsert.read_upsert_parquet(
+            spark, os.path.join(root, name)).collect()))
+        for name in LOAD_ORDER
+    }
+
+
 def test_validate_and_idempotent_load(spark, tmp_path):
-    from data_integration_and_visualization_uc3m_spark.operators import upsert
-    from data_integration_and_visualization_uc3m_spark.schemas import (
-        LOAD_ORDER,
-        NATURAL_KEYS,
-    )
+    root = str(tmp_path)
+    reports, loaded = [], []
+    for _ in range(2):
+        reports.append(star.run_pass(spark, raw_sources(spark), root))
+        loaded.append(live_rows(spark, root))
+    assert all(v == 0 for r in reports for v in r.values()), reports
+    assert len(reports[0]) == 11, reports[0]
+    for name in LOAD_ORDER:
+        assert loaded[0][name], f"{name} loaded nothing"
+    assert loaded[0] == loaded[1]
 
-    aggregates = spark.createDataFrame([("WLD",)], "code string")
-    country, population = star.transform_country_and_population(
-        raw_population(spark), aggregates
-    )
-    tables = {"country": country, "year": year_dim(spark), "population": population}
-    report = star.validate_star(tables)
-    assert all(v == 0 for v in report.values()), report
 
-    def load() -> dict[str, list[tuple]]:
-        out = {}
-        for name in (t for t in LOAD_ORDER if t in tables):
-            root = str(tmp_path / name)
-            upsert.write_upsert_parquet(root, tables[name], NATURAL_KEYS[name])
-            live = upsert.read_upsert_parquet(spark, root)
-            out[name] = sorted(map(tuple, live.collect()))
-        return out
+def _blocked_pass(spark, root, sources, counter):
+    """run_pass must raise on ``counter``, keep every table's live
+    snapshot, and leave no snapshot dir of its own behind."""
+    def state():
+        return {name: (upsert.current_snapshot(os.path.join(root, name)),
+                       sorted(os.listdir(os.path.join(root, name))))
+                for name in LOAD_ORDER}
 
-    loaded_once = load()
-    loaded_twice = load()
-    for name in tables:
-        assert loaded_once[name], f"{name} loaded nothing"
-        assert loaded_once[name] == loaded_twice[name], f"{name} not idempotent"
+    before = state()
+    with pytest.raises(star.StarViolation) as err:
+        star.run_pass(spark, sources, root)
+    assert err.value.report[counter] > 0, err.value.report
+    assert state() == before
+
+
+def test_run_pass_blocks_duplicate_key_in_live_snapshot(spark, tmp_path):
+    root = str(tmp_path)
+    star.run_pass(spark, raw_sources(spark), root)
+    # a live country snapshot that already holds a key twice
+    table = os.path.join(root, "country")
+    cur = upsert.current_snapshot(table)
+    dup = upsert.read_upsert_parquet(spark, table).unionByName(
+        spark.createDataFrame([("ESP", "espana")],
+                              "country_iso3_id string, country_name string"))
+    name = upsert._next_snapshot_name(table)
+    dup.write.parquet(os.path.join(table, name))
+    upsert._commit_manifest(table, name, expect=cur)
+    _blocked_pass(spark, root, raw_sources(spark), "country_dup_keys")
+
+
+def test_run_pass_blocks_fk_orphan(spark, tmp_path):
+    root = str(tmp_path)
+    star.run_pass(spark, raw_sources(spark), root)
+    # NOR is convicted in the UN feed but absent from the World Bank's
+    orphan = raw_crime(spark).filter(F.col("Iso3_code") == "ESP").withColumn(
+        "Iso3_code", F.lit("NOR"))
+    sources = raw_sources(spark, crime=raw_crime(spark).unionByName(orphan))
+    _blocked_pass(spark, root, sources, "crime_fk_country")
 
 
 def _reference_report(tables):

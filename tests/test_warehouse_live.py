@@ -1,10 +1,11 @@
 """Live warehouse e2e — the reference's full load path against a REAL
 database: schema.sql DDL (PK/FK/UNIQUE/identity + seeded year dim)
-executed on embedded Derby, the star transforms run on reference-shaped
-fixtures, the FK-ordered load performed with the atomic stage-then-swap
-sink, and the constraints exercised live (FK violation rejected
-atomically; duplicate-batch reload blocked by UNIQUE unless routed
-through the conflict-ignore path)."""
+executed on embedded Derby, the star pass (`plans.star.run_pass`) run on
+reference-shaped fixtures, the FK-ordered load of its published tables
+performed with the atomic stage-then-swap sink, and the constraints
+exercised live (FK violation rejected atomically; duplicate-batch
+reload blocked by UNIQUE unless routed through the conflict-ignore
+path)."""
 
 from __future__ import annotations
 
@@ -12,9 +13,11 @@ from decimal import Decimal
 
 from py4j.java_gateway import java_import
 
+from data_integration_and_visualization_uc3m_spark.operators import upsert
 from data_integration_and_visualization_uc3m_spark.plans import star
 from data_integration_and_visualization_uc3m_spark.schemas import (
     LOAD_ORDER,
+    RAW_CRIME,
     RAW_POPULATION,
 )
 from data_integration_and_visualization_uc3m_spark.sinks.writers import (
@@ -54,7 +57,7 @@ def _read(spark, table):
     return df.toDF(*[c.lower() for c in df.columns])
 
 
-def test_star_schema_loads_live(spark):
+def test_star_schema_loads_live(spark, tmp_path):
     _fresh_schema(spark)
 
     raw_pop = spark.createDataFrame(
@@ -65,29 +68,23 @@ def test_star_schema_loads_live(spark):
         ],
         RAW_POPULATION,
     )
-    aggregates = spark.createDataFrame([("WLD",)], "code string")
-    country, population = star.transform_country_and_population(
-        raw_pop, aggregates
-    )
     raw_immig = spark.createDataFrame(
         [("ES", 2019, "94000"), ("FR", 2019, ":")],
         "geo string, TIME_PERIOD int, OBS_VALUE string",
     )
-    immigration = star.transform_immigration(
-        raw_immig, population, star.iso2_lookup(spark)
-    )
-
-    # engine-side validation says loadable, then the live load agrees
-    report = star.validate_star(
-        {"country": country, "population": population, "immigration": immigration}
-    )
+    # the engine-side pass publishes only a star it validated...
+    report = star.run_pass(spark, {
+        "raw_pop": raw_pop,
+        "aggregates": spark.createDataFrame([("WLD",)], "code string"),
+        "raw_crime": spark.createDataFrame([], RAW_CRIME),
+        "raw_immig": raw_immig,
+    }, str(tmp_path))
     assert all(v == 0 for v in report.values()), report
 
-    assert jdbc_atomic_append(country, URL, "country", properties=PROPS) == 2
-    assert jdbc_atomic_append(population, URL, "population", properties=PROPS) == 2
-    assert (
-        jdbc_atomic_append(immigration, URL, "immigration", properties=PROPS) == 2
-    )
+    # ...and the live load of the published tables agrees
+    for name in ("country", "population", "immigration"):
+        published = upsert.read_upsert_parquet(spark, str(tmp_path / name))
+        assert jdbc_atomic_append(published, URL, name, properties=PROPS) == 2, name
 
     assert _read(spark, '"year"').count() == 5  # DDL-seeded 2018-2022
     got = {
@@ -133,8 +130,6 @@ def test_live_constraints_reject_bad_loads(spark):
     # ...but the K2 conflict-ignore route (anti-join vs current target)
     # turns the reload into a clean no-op — the reference's ON CONFLICT
     # DO NOTHING loop (etl:332-345) against the live constraint
-    from data_integration_and_visualization_uc3m_spark.operators import upsert
-
     target = _read(spark, "population").select(
         "population", "country_iso3_id", "year_id"
     )

@@ -12,14 +12,14 @@ data.csv → plotly traces), this script does Spark-first in one run:
    DETERMINISTIC reference-shaped fixtures derived from the ISO
    3166-1 universe — clearly marked below, same schemas the live
    ingests produce.
-2. TRANSFORM — the plans/star.py DAGs (full-universe alias
-   normalization, coercion, 7-way slice, validated m2o join, rate
-   arithmetic, HALF_UP decimal contract).
-3. VALIDATE — validate_star (the DDL constraint surface engine-side).
-4. LOAD — star.ddl_statements() on a LIVE embedded Derby warehouse,
-   then FK-ordered atomic stage-then-swap loads (per-table
-   commit/rollback, database-generated surrogate keys).
-5. EGRESS — the viz layer's data.csv (hover text + positional size
+2. STAR PASS — ``plans.star.run_pass`` transforms, stages, validates
+   and publishes the star as versioned parquet under
+   ``<output_dir>/warehouse`` (nothing is published on a violation).
+3. LOAD — star.ddl_statements() on a LIVE embedded Derby warehouse,
+   then FK-ordered atomic stage-then-swap loads of the published
+   tables (per-table commit/rollback, database-generated surrogate
+   keys).
+4. EGRESS — the viz layer's data.csv (hover text + positional size
    buckets) written via the K5 CSV sink, from a query over the LIVE
    warehouse tables.
 
@@ -52,6 +52,9 @@ def main() -> None:
     from pyspark.sql import types as T
 
     from data_integration_and_visualization_uc3m_spark.functions import iso3166
+    from data_integration_and_visualization_uc3m_spark.operators.upsert import (
+        read_upsert_parquet,
+    )
     from data_integration_and_visualization_uc3m_spark.plans import star
     from data_integration_and_visualization_uc3m_spark.schemas import (
         LOAD_ORDER,
@@ -65,6 +68,7 @@ def main() -> None:
         write_viz_csv,
     )
     from data_integration_and_visualization_uc3m_spark.sources.readers import (
+        local_frame,
         read_csv,
     )
 
@@ -72,134 +76,89 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # ---- 1. EXTRACT ------------------------------------------------
-    eurostat_schema = T.StructType(
-        [T.StructField(c, T.StringType(), True) for c in (
+    # the raw header has BOTH `sex` and `Sex` — Spark resolves
+    # case-insensitively, so the code column gets a new name
+    # (schema-on-CSV maps positionally; header row is skipped)
+    eurostat_schema = T.StructType([
+        T.StructField(c, T.IntegerType() if c == "TIME_PERIOD" else T.StringType())
+        for c in (
             "STRUCTURE", "STRUCTURE_ID", "STRUCTURE_NAME", "freq",
             "Time frequency", "citizen", "Country of citizenship",
             "agedef", "Age definition", "age", "Age class", "unit",
-            # the raw header has BOTH `sex` and `Sex` — Spark resolves
-            # case-insensitively, so the code column gets a new name
-            # (schema-on-CSV maps positionally; header row is skipped)
             "Unit of measure", "sex_code", "Sex", "geo",
-            "Geopolitical entity (reporting)",
-        )]
-        + [
-            T.StructField("TIME_PERIOD", T.IntegerType(), True),
-            T.StructField("Time", T.StringType(), True),
-            T.StructField("OBS_VALUE", T.StringType(), True),
-        ]
-        + [T.StructField(c, T.StringType(), True) for c in (
-            "Observation value", "OBS_FLAG",
+            "Geopolitical entity (reporting)", "TIME_PERIOD", "Time",
+            "OBS_VALUE", "Observation value", "OBS_FLAG",
             "Observation status (Flag) V2 structure", "CONF_STATUS",
             "Confidentiality status (flag)",
-        )]
-    )
+        )
+    ])
     have_real_csv = os.path.exists(EUROSTAT_CSV)
     if have_real_csv:
         raw_immig = read_csv(spark, EUROSTAT_CSV, eurostat_schema)
     else:  # standalone fallback: same shape, tiny fixture
-        raw_immig = spark.createDataFrame(
-            [("ES", 2019, "94000"), ("EL", 2019, ":"), ("DE", 2019, "88000")],
-            "geo string, TIME_PERIOD int, OBS_VALUE string",
-        )
+        raw_immig = local_frame(spark, [
+            {"geo": g, "TIME_PERIOD": 2019, "OBS_VALUE": v}
+            for g, v in (("ES", "94000"), ("EL", ":"), ("DE", "88000"))
+        ], eurostat_schema)
 
     # geo/year domain actually present in the feed drives the fixtures
-    geos = [
-        r.geo
+    feed = sorted(
+        (r.geo, star.ISO2_TO_ISO3[r.geo.upper()])
         for r in raw_immig.select("geo").distinct().collect()
-        if r.geo and len(r.geo) == 2
-    ]
-    years = list(YEARS)
-    iso3_of = {a2.lower(): a3 for a2, a3, _, _ in iso3166.COUNTRIES}
-    iso3_of.update(dict(iso3166.EXTRA_ALIASES))
+        if r.geo and len(r.geo) == 2 and r.geo.upper() in star.ISO2_TO_ISO3
+    )
     name_of = {a3: name for _, a3, name, _ in iso3166.COUNTRIES}
 
     # DETERMINISTIC FIXTURE (World Bank population API stand-in):
     # value derived from iso3 chars + year so every run is identical.
-    pop_rows = []
-    for g in sorted(geos):
-        a3 = iso3_of.get(g.lower())
-        if not a3:
-            continue
-        for y in years:
-            pop = 5_000_000 + sum(ord(c) for c in a3) * 100_000 + y * 37
-            pop_rows.append((a3, (g, name_of[a3]), str(pop), y))
-    raw_pop = spark.createDataFrame(pop_rows, RAW_POPULATION)
-    aggregates = spark.createDataFrame(
-        [("WLD",), ("EUU",), ("EU27_2020",)], "code string"
+    raw_pop = local_frame(spark, [
+        {"countryiso3code": a3, "country": {"id": g, "value": name_of[a3]},
+         "value": 5_000_000 + sum(map(ord, a3)) * 100_000 + y * 37,
+         "year_id": y}
+        for g, a3 in feed for y in YEARS
+    ], RAW_POPULATION)
+    aggregates = local_frame(
+        spark, [{"code": c} for c in ("WLD", "EUU", "EU27_2020")],
+        T.StructType([T.StructField("code", T.StringType())]),
     )
 
     # DETERMINISTIC FIXTURE (UN crime XLSX stand-in — the blob is
     # absent from the reference repo itself): rate from iso3+year.
-    crime_rows = []
-    for g in sorted(geos):
-        a3 = iso3_of.get(g.lower())
-        if not a3:
-            continue
-        for y in years:
-            rate = (sum(ord(c) for c in a3) % 50) + (y % 7) + 0.125
-            crime_rows.append(
-                (a3, name_of[a3], "Europe", y, "Total", "Total", "Total",
-                 "Persons convicted", "Rate per 100,000 population",
-                 str(rate))
-            )
-    raw_crime = spark.createDataFrame(crime_rows, RAW_CRIME)
+    raw_crime = local_frame(spark, [
+        {"Iso3_code": a3, "Country": name_of[a3], "Region": "Europe",
+         "Year": y, "Category": "Total", "Sex": "Total", "Age": "Total",
+         "Indicator": "Persons convicted",
+         "Unit of measurement": "Rate per 100,000 population",
+         "VALUE": (sum(map(ord, a3)) % 50) + (y % 7) + 0.125}
+        for _, a3 in feed for y in YEARS
+    ], RAW_CRIME)
 
-    # ---- 2. TRANSFORM ---------------------------------------------
-    country, population = star.transform_country_and_population(
-        raw_pop, aggregates
-    )
-    crime = star.transform_crime(raw_crime)
-    immigration = star.transform_immigration(
-        raw_immig.select("geo", "TIME_PERIOD", "OBS_VALUE"),
-        population,
-        star.iso2_lookup(spark),
-    )
-    # the real feed repeats each (geo, year) across the agedef
-    # dimension (COMPLET vs REACH, same value); the reference absorbs
-    # that at the DB via ON CONFLICT DO NOTHING — A2 batch first-wins
-    # is the engine-side equivalent
-    from data_integration_and_visualization_uc3m_spark.operators import upsert
+    # ---- 2. STAR PASS (stage, validate, publish) ------------------
+    warehouse = os.path.join(out_dir, "warehouse")
+    report = star.run_pass(spark, {
+        "raw_pop": raw_pop, "aggregates": aggregates,
+        "raw_crime": raw_crime, "raw_immig": raw_immig,
+    }, warehouse)
 
-    immigration = upsert.dedup_batch_first_wins(
-        immigration,
-        keys=["country_iso3_id", "year_id"],
-        order_by=["immigration_per_100000"],
-    )
-    tables = {
-        "country": country,
-        "population": population,
-        "crime": crime,
-        "immigration": immigration,
-    }
-
-    # ---- 3. VALIDATE ----------------------------------------------
-    report = star.validate_star(tables)
-    assert all(v == 0 for v in report.values()), report
-
-    # ---- 4. LOAD (live Derby warehouse) ---------------------------
+    # ---- 3. LOAD (live Derby warehouse) ---------------------------
     jvm = spark._jvm
     java_import(jvm, "java.sql.DriverManager")
     conn = jvm.DriverManager.getConnection(URL)
-    st = conn.createStatement()
-    for t in reversed(LOAD_ORDER):
-        try:
-            st.execute(f'DROP TABLE "{t}"' if t == "year" else f"DROP TABLE {t}")
-        except Exception:
-            pass
+    st = conn.createStatement()  # the in-memory database is new per JVM
     for stmt in star.ddl_statements():
         st.execute(stmt)
     conn.close()
 
-    loaded = {}
-    for name in LOAD_ORDER:
-        if name == "year":
-            continue  # DDL-seeded
-        loaded[name] = jdbc_atomic_append(
-            tables[name], URL, name, properties=PROPS
+    loaded = {
+        name: jdbc_atomic_append(
+            read_upsert_parquet(spark, os.path.join(warehouse, name)),
+            URL, name, properties=PROPS,
         )
+        for name in LOAD_ORDER
+        if name != "year"  # DDL-seeded
+    }
 
-    # ---- 5. EGRESS (viz data.csv from the LIVE warehouse) ---------
+    # ---- 4. EGRESS (viz data.csv from the LIVE warehouse) ---------
     def wh(table):
         df = (
             spark.read.format("jdbc")
@@ -248,8 +207,7 @@ def main() -> None:
         "eurostat_source": "real" if have_real_csv else "fixture",
         "raw_immigration_rows": raw_immig.count(),
         "loaded": loaded,
-        "warehouse_counts": {t: wh(t).count() for t in
-                             ("country", "population", "crime", "immigration")},
+        "warehouse_counts": {t: wh(t).count() for t in loaded},
         "year_seeded": wh('"year"').count(),
         "validation": report,
         "viz_rows": viz.count(),
