@@ -2,7 +2,8 @@
 the training-data-pipeline extensions).
 
 The reference's dedup surface is keyed ``drop_duplicates``
-(``crime_immigration_etl.py:199-203,335-368``); the 100 TB extension adds
+(``crime_immigration_etl.py:199-203,335-368``), which is
+``slicing.top_k_per_group`` with k=1; the 100 TB extension adds
 document-level exact and near-dup detection, all built on one portable
 primitive: ``md5`` (identical across Spark and the DuckDB oracle, so
 every operator here is oracle-checkable — no engine-specific hashes).
@@ -19,28 +20,10 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ._ck import ck_rdd_id, unpersist_by_id
-
-# --- keyed dedup (reference surface) --------------------------------------
-
-
-def keyed_dedup_first_wins(df: DataFrame, keys: list[str], order_by: list) -> DataFrame:
-    """A1 — key-scoped distinct with deterministic first-wins pick
-    (``drop_duplicates(subset=...)`` keeps file order in pandas;
-    Spark needs the explicit ordering — SURVEY §7.4.3).
-
-    ``order_by``: Columns (may carry .desc()) or column-name strings.
-    """
-    w = Window.partitionBy(*keys).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
 
 # --- document-level exact dedup -------------------------------------------
 

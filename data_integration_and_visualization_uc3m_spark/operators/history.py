@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-OPEN_END = "9999-12-31"
-
 
 def snapshot_to_scd2(
     snapshot: DataFrame, keys: list[str], tracked: list[str], version: int

@@ -27,22 +27,11 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 class DecoderUnavailable(NotImplementedError):
     """Raised by stubbed codec paths — swap in a real decoder (PIL,
     torchaudio, pyav) where available."""
-
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("mime_type", T.StringType(), True),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
 
 
 def documents_as_media(docs: DataFrame) -> DataFrame:
@@ -333,6 +322,27 @@ def _le_read(payload: F.Column, pos: int, nbytes: int) -> F.Column:
     return F.conv(swapped, 16, 10).cast("long")
 
 
+def _pcm16_samples(payload: F.Column) -> tuple[F.Column, F.Column]:
+    """``(n_samples, samples)`` of a mono 16-bit PCM WAV payload: the
+    data-chunk size over 2, and the decoded sample array (long). Each
+    sample is a hex byte-swap + two's-complement read."""
+    hx = F.hex(payload)
+    n = (_le_read(payload, 41, 4) / F.lit(2)).cast("long")
+
+    def sample_at(j: F.Column) -> F.Column:
+        # sample j (1-based) occupies bytes 44+2(j-1)..+1 → hex chars
+        # at position 4j+85, length 4 (1-based); LE pair swap, then
+        # two's complement
+        chunk = F.substr(hx, j * 4 + 85, F.lit(4))
+        swapped = F.concat(
+            F.substring(chunk, 3, 2), F.substring(chunk, 1, 2)
+        )
+        u = F.conv(swapped, 16, 10).cast("long")
+        return F.when(u < 32768, u).otherwise(u - 65536)
+
+    return n, F.transform(F.sequence(F.lit(1).cast("long"), n), sample_at)
+
+
 def synthesize_wav(
     df: DataFrame,
     id_col: str = "media_id",
@@ -495,23 +505,7 @@ def wav_pcm_stats(
     read over a ``transform``; the whole path is whole-stage-codegen'd
     column expressions."""
     p = F.col(payload_col)
-    hx = F.hex(p)
-    n = (_le_read(p, 41, 4) / F.lit(2)).cast("long")
-
-    def sample_at(j: F.Column) -> F.Column:
-        # sample j (1-based) occupies bytes 44+2(j-1)..+1 → hex chars
-        # at position 4j+85, length 4 (1-based); LE pair swap, then
-        # two's complement
-        chunk = F.substr(hx, j * 4 + 85, F.lit(4))
-        swapped = F.concat(
-            F.substring(chunk, 3, 2), F.substring(chunk, 1, 2)
-        )
-        u = F.conv(swapped, 16, 10).cast("long")
-        return F.when(u < 32768, u).otherwise(u - 65536)
-
-    samples = F.transform(
-        F.sequence(F.lit(1).cast("long"), n), sample_at
-    )
+    n, samples = _pcm16_samples(p)
     sum_sq = F.aggregate(
         samples,
         F.lit(0).cast("long"),
@@ -564,25 +558,8 @@ def wav_pcm_autocorr(
     aggregates — referencing the decode expression per lag would
     re-inline it per use (the Catalyst re-inlining trap noted at
     gopher_rules), re-decoding every sample 1+2·|lags| times."""
-    p = F.col(payload_col)
-    hx = F.hex(p)
-    n = (_le_read(p, 41, 4) / F.lit(2)).cast("long")
-
-    def sample_at(j: F.Column) -> F.Column:
-        chunk = F.substr(hx, j * 4 + 85, F.lit(4))
-        swapped = F.concat(
-            F.substring(chunk, 3, 2), F.substring(chunk, 1, 2)
-        )
-        u = F.conv(swapped, 16, 10).cast("long")
-        return F.when(u < 32768, u).otherwise(u - 65536)
-
-    decoded = media.select(
-        F.col(id_col),
-        n.alias("_n"),
-        F.transform(
-            F.sequence(F.lit(1).cast("long"), n), sample_at
-        ).alias("_s"),
-    )
+    n, s = _pcm16_samples(F.col(payload_col))
+    decoded = media.select(F.col(id_col), n.alias("_n"), s.alias("_s"))
     samples = F.col("_s")
     nn = F.col("_n")
     r0 = F.aggregate(
@@ -1210,9 +1187,6 @@ def gray_resize_area(
 # F.aggregate fold as the JPEG/MP4 walks — 100% JVM expressions, the
 # shape that indexes a million shards without opening Python.
 
-_TAR_BLANK_CHKSUM_HEX = "20" * 8  # checksum field = spaces while summing
-
-
 # Checksum constant: byte sum of every FIXED header field with the
 # checksum slot as 8 spaces — mode "0000644\0" (350) + uid/gid
 # "0000000\0" (336 each) + mtime "%011o" zeros (528) + 8 spaces (256)
@@ -1457,25 +1431,8 @@ def wav_pcm_vad_segments(
     all-silent clips emit no rows."""
     from pyspark.sql import Window
 
-    p = F.col(payload_col)
-    hx = F.hex(p)
-    n = (_le_read(p, 41, 4) / F.lit(2)).cast("long")
-
-    def sample_at(j: F.Column) -> F.Column:
-        chunk = F.substr(hx, j * 4 + 85, F.lit(4))
-        swapped = F.concat(
-            F.substring(chunk, 3, 2), F.substring(chunk, 1, 2)
-        )
-        u = F.conv(swapped, 16, 10).cast("long")
-        return F.when(u < 32768, u).otherwise(u - 65536)
-
-    decoded = media.select(
-        F.col(id_col),
-        n.alias("_n"),
-        F.transform(
-            F.sequence(F.lit(1).cast("long"), n), sample_at
-        ).alias("_s"),
-    )
+    n, s = _pcm16_samples(F.col(payload_col))
+    decoded = media.select(F.col(id_col), n.alias("_n"), s.alias("_s"))
     nf = (F.col("_n") / frame).cast("long")  # full frames only
     energy_f = F.transform(
         F.sequence(F.lit(0).cast("long"), nf - 1),

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .slicing import top_k_per_group
+
 # 2^32 — the hash space of the first 8 md5 hex chars.
 HASH_SPACE = 1 << 32
 
@@ -168,15 +170,13 @@ def quota_per_group(
 
     One shuffle on ``group_col``; with AQE, skewed groups split. This
     is the distributed replacement for reservoir sampling — same
-    guarantee, no sequential state.
+    guarantee, no sequential state. It is also the per-source
+    frequency cap (``seed="cap"``): the rank-then-filter shape is
+    rewritten to a WindowGroupLimit, so each partition keeps at most
+    ``n`` rows per group before the exchange.
     """
-    w = Window.partitionBy(group_col).orderBy(
-        hash_bucket(F.col(key_col), seed), F.col(key_col)
-    )
-    return (
-        df.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= n)
-        .drop("_rk")
+    return top_k_per_group(
+        df, [group_col], [hash_bucket(F.col(key_col), seed), F.col(key_col)], n
     )
 
 
@@ -217,39 +217,6 @@ def training_shuffle(
     return (
         out.withColumn("shuffle_rank", F.row_number().over(w).cast("int"))
         .drop("_h")
-    )
-
-
-def cap_per_group(
-    df: DataFrame,
-    group_col: str,
-    cap: int,
-    key_col: str,
-    seed: str = "cap",
-) -> DataFrame:
-    """Frequency capping: keep at most ``cap`` rows per group, chosen
-    by deterministic hash rank — the per-domain/per-source cap every
-    web-scale corpus applies so one crawl host can't dominate training
-    (the CCNet/RefinedWeb "head domains" mitigation).
-
-    The pick is ``row_number`` over (md5 rank, key tiebreak) inside
-    each group: stable across runs, engines, and cluster layouts —
-    re-running the cap after new data arrives keeps previously-kept
-    rows kept (their hash rank only improves as the threshold fills).
-
-    Scale: one shuffle on the group key. The row_number-then-filter
-    shape is recognized by Spark's WindowGroupLimit rewrite (3.5+), so
-    each partition keeps only ``cap`` rows per group BEFORE the
-    exchange — a skewed mega-domain never materializes its full rank
-    list on one task.
-    """
-    w = Window.partitionBy(group_col).orderBy(
-        hash_bucket(F.col(key_col), seed), F.col(key_col)
-    )
-    return (
-        df.withColumn("_cap_rk", F.row_number().over(w))
-        .filter(F.col("_cap_rk") <= cap)
-        .drop("_cap_rk")
     )
 
 

@@ -37,6 +37,16 @@ def _dot(a, b):
     )
 
 
+def _idot(a, b):
+    """Exact LONG dot product of integer arrays (int8 codes: ≤127²·dim,
+    far inside 2^53, so a double cast of it is lossless)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("long") * y),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+
+
 def rademacher_component_col(plane_col, dim_col) -> F.Column:
     """±1 pseudo-random component for (plane, dim), via md5 hex parity
     — an engine-portable replacement for a seeded Gaussian. Integer

@@ -26,8 +26,10 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .slicing import top_k_per_group
 
 
 def dedup_batch_first_wins(
@@ -43,12 +45,7 @@ def dedup_batch_first_wins(
     """
     if not order_by:
         return batch.dropDuplicates(keys)
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c) for c in order_by])
-    return (
-        batch.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return top_k_per_group(batch, keys, [F.col(c) for c in order_by], 1)
 
 
 def upsert_ignore(
@@ -289,7 +286,12 @@ def _merged(
     cur = current_snapshot(root)
     if cur is None:
         return dedup_batch_first_wins(batch, keys, order_by), None
-    target = batch.sparkSession.read.parquet(os.path.join(root, cur))
+    # the live snapshot holds the batch's columns (first commit) or a
+    # merge over them, so the batch schema reads it without an
+    # inference job
+    target = batch.sparkSession.read.schema(batch.schema).parquet(
+        os.path.join(root, cur)
+    )
     merge = upsert_ignore if mode == "ignore" else upsert_replace
     return merge(target, batch, keys, order_by), cur
 

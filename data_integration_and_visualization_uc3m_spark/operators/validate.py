@@ -98,39 +98,3 @@ def expectation_report(
         ).select(F.lit(uname).alias("rule"), "n_rows", "n_violations")
         report = report.unionByName(urow)
     return report.withColumn("passed", F.col("n_violations") == 0)
-
-
-def expect_schema(
-    df: DataFrame,
-    expected: dict[str, str],
-    strict: bool = False,
-) -> DataFrame:
-    """Schema CONTRACT check — the gate a pipeline runs before touching
-    data whose producer it doesn't control: every expected column must
-    exist with the expected Spark simpleString type; with ``strict``,
-    columns outside the contract are violations too (producer added a
-    field the consumer never agreed to).
-
-    Pure metadata (no job runs): the report is built from df.schema on
-    the driver and returned as a DataFrame so it composes with the
-    other validators' report sinks. One row per checked column:
-    (column, expected_type, actual_type, status ∈ ok|missing|
-    type_mismatch|unexpected).
-    """
-    actual = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    rows = []
-    for col, typ in expected.items():
-        if col not in actual:
-            rows.append((col, typ, None, "missing"))
-        elif actual[col] != typ:
-            rows.append((col, typ, actual[col], "type_mismatch"))
-        else:
-            rows.append((col, typ, actual[col], "ok"))
-    if strict:
-        for col in df.columns:
-            if col not in expected:
-                rows.append((col, None, actual[col], "unexpected"))
-    return df.sparkSession.createDataFrame(
-        rows,
-        "column string, expected_type string, actual_type string, status string",
-    )

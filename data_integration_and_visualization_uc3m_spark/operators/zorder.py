@@ -78,32 +78,3 @@ def zorder_bucket_stats(
             (F.max("b") - F.min("b")).alias("span_b"),
         )
     )
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 8,
-) -> None:
-    """OPTIMIZE-ZORDER-style clustered rewrite: compute the Morton key,
-    range-partition the table into ``n_files`` z-key ranges, sort each
-    partition by z-key, write parquet. Each output file then covers a
-    compact 2-D rectangle, so its parquet footer min/max statistics on
-    BOTH columns are tight — readers filtering on either (or both)
-    dimension skip whole files/row-groups. The z-key itself is dropped
-    before the write (it is a physical layout artifact, not data).
-
-    Scale: repartitionByRange samples the key distribution (one extra
-    lightweight pass) and gives each task one contiguous z-range —
-    the same shuffle shape as any global sort, O(data) with uniform
-    task sizes."""
-    keyed = df.withColumn("__zkey", morton_key16(F.col(col_a), F.col(col_b)))
-    (
-        keyed.repartitionByRange(n_files, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -136,12 +136,17 @@ def transform_immigration(
     with population → rate = total/pop·100000 rounded (etl:292-297)."""
     df = cleaning.project(raw_immig, ["geo", "TIME_PERIOD", "OBS_VALUE"])
     df = df.filter(filters.valid_code_length("geo", 2))
-    df = joins.lookup_join_with_fallback(
-        df, iso2_to_iso3, cleaning.normalize_string("geo"), "country_iso3_id"
-    )
-    # fallback leaves unknown ISO2 lowercase (len 2) — drop them: the
-    # reference's converter returns 'not found' which fails the FK load
-    df = df.filter(F.length("country_iso3_id") == 3)
+    # inner lookup: an unknown ISO2 has no ISO3 — the reference's
+    # converter returns 'not found', which fails the FK load
+    df = df.withColumn("__lk", cleaning.normalize_string("geo")).join(
+        F.broadcast(
+            iso2_to_iso3.select(
+                F.col("alias").alias("__lk"),
+                F.col("canonical").alias("country_iso3_id"),
+            )
+        ),
+        "__lk",
+    ).drop("__lk")
     df = df.withColumn("year_id", F.col("TIME_PERIOD").cast("int"))
     df = df.withColumn(
         "immigration_total",

@@ -169,10 +169,8 @@ def keyed_dedup_first_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 — deterministic first-wins dedup per key (richest customer per
     nation), replacing pandas' file-order drop_duplicates (etl:199-203)."""
     c = _t(spark, sf_dir, "customer")
-    return dedup.keyed_dedup_first_wins(
-        c,
-        keys=["c_nationkey"],
-        order_by=[F.col("c_acctbal").desc(), F.col("c_custkey")],
+    return slicing.top_k_per_group(
+        c, ["c_nationkey"], [F.col("c_acctbal").desc(), F.col("c_custkey")], 1
     ).select("c_nationkey", "c_custkey", "c_name")
 
 

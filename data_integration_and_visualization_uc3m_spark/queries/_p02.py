@@ -1461,13 +1461,6 @@ def ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     quant = similarity.quantize_embeddings(_t(spark, sf_dir, "embeddings")).select(
         "vec_id", "codes"
     )
-    def idot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("long") * y),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).cast("double")
-
     # The query self-dot is computed ONCE on the 1-row broadcast side —
     # evaluating it per data row (3 fold-aggregates/row) was one third
     # of the query's per-row cost for a constant answer. A driver-side
@@ -1477,15 +1470,18 @@ def ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         quant.filter(F.col("vec_id") == 0)
         .select(F.col("codes").alias("qc"))
-        .select("qc", idot(F.col("qc"), F.col("qc")).alias("nb2"))
+        .select(
+            "qc",
+            similarity._idot(F.col("qc"), F.col("qc")).cast("double").alias("nb2"),
+        )
     )
     scored = (
         quant.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            idot(F.col("codes"), F.col("qc")).alias("dot"),
-            idot(F.col("codes"), F.col("codes")).alias("na2"),
+            similarity._idot(F.col("codes"), F.col("qc")).cast("double").alias("dot"),
+            similarity._idot(F.col("codes"), F.col("codes")).cast("double").alias("na2"),
             "nb2",
         )
     )

@@ -2002,10 +2002,10 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def source_frequency_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source frequency capping (the head-domain mitigation): at
     most 20 docs per source by deterministic hash rank
-    (operators/sampling.py:cap_per_group — WindowGroupLimit shape, no
+    (operators/sampling.py:quota_per_group — WindowGroupLimit shape, no
     full rank list per group), reported as kept/dropped per source."""
     d = _t(spark, sf_dir, "documents")
-    kept = sampling.cap_per_group(d, "source", 20, "doc_id", seed="cap")
+    kept = sampling.quota_per_group(d, "source", 20, "doc_id", seed="cap")
     totals = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_total"))
     keptc = kept.groupBy("source").agg(F.count(F.lit(1)).alias("n_kept"))
     return totals.join(keptc, "source").select(

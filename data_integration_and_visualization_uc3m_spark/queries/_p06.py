@@ -404,7 +404,7 @@ def corpus_build_v2_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole chain is one Catalyst plan, exactly how a 100 TB build
     would submit it."""
     d = _t(spark, sf_dir, "documents")
-    capped = sampling.cap_per_group(d, "source", 20, "doc_id", seed="cap")
+    capped = sampling.quota_per_group(d, "source", 20, "doc_id", seed="cap")
     toks = F.split(F.lower(F.col("text")), " ")
     n_tokens = F.size(toks)
     ttr = F.size(F.array_distinct(toks)).cast("double") / n_tokens
@@ -1759,6 +1759,18 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _fp6(num: str, den: str) -> F.Column:
+    """``floor(num / den * 1e6)`` as a long; -1 when ``den`` is 0 — the
+    LSH recall/precision ratios the oracles compute in SQL."""
+    return (
+        F.when(
+            F.col(den) > 0,
+            F.floor(F.col(num).cast("double") / F.col(den) * 1000000).cast("long"),
+        )
+        .otherwise(F.lit(-1).cast("long"))
+    )
+
+
 @register(
     "lsh_recall_report",
     f"""
@@ -1862,20 +1874,12 @@ def lsh_recall_report(
     )
     row = n_truth.crossJoin(F.broadcast(n_cand)).crossJoin(F.broadcast(n_hit))
 
-    def fp6(num: str, den: str) -> F.Column:
-        return (
-            F.when(F.col(den) > 0,
-                   F.floor(F.col(num).cast("double") / F.col(den) * 1000000)
-                   .cast("long"))
-            .otherwise(F.lit(-1).cast("long"))
-        )
-
     return row.select(
         "n_truth_pairs",
         "n_candidates",
         "n_candidates_true",
-        fp6("n_candidates_true", "n_truth_pairs").alias("recall_fp6"),
-        fp6("n_candidates_true", "n_candidates").alias("precision_fp6"),
+        _fp6("n_candidates_true", "n_truth_pairs").alias("recall_fp6"),
+        _fp6("n_candidates_true", "n_candidates").alias("precision_fp6"),
     )
 
 
@@ -2015,25 +2019,14 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = row if out is None else out.unionByName(row)
 
-    def fp6(num: str, den: str) -> F.Column:
-        return (
-            F.when(
-                F.col(den) > 0,
-                F.floor(
-                    F.col(num).cast("double") / F.col(den) * 1000000
-                ).cast("long"),
-            )
-            .otherwise(F.lit(-1).cast("long"))
-        )
-
     return out.select(
         "bands",
         "rows_per_band",
         "n_truth_pairs",
         "n_candidates",
         "n_candidates_true",
-        fp6("n_candidates_true", "n_truth_pairs").alias("recall_fp6"),
-        fp6("n_candidates_true", "n_candidates").alias("precision_fp6"),
+        _fp6("n_candidates_true", "n_truth_pairs").alias("recall_fp6"),
+        _fp6("n_candidates_true", "n_candidates").alias("precision_fp6"),
     )
 
 

@@ -727,25 +727,11 @@ def retrieval_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guide §2.5 input skew — the hash_bootstrap class)
     e = _t(spark, sf_dir, "embeddings", fanout=True)
 
-    def ddot(a: F.Column, b: F.Column) -> F.Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    def idot(a: F.Column, b: F.Column) -> F.Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("long") * y),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).cast("double")
-
     vd = e.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    data = vd.withColumn("n2", ddot(F.col("v"), F.col("v"))).filter(
+    data = vd.withColumn("n2", similarity._dot(F.col("v"), F.col("v"))).filter(
         F.col("n2") > 0
     )
     qrel = data.filter(F.col("vec_id") < 4).select(
@@ -760,7 +746,7 @@ def retrieval_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qid",
             "vec_id",
             (
-                ddot(F.col("v"), F.col("qv"))
+                similarity._dot(F.col("v"), F.col("qv"))
                 / (F.sqrt("n2") * F.sqrt("qn2"))
             ).alias("cos"),
         )
@@ -777,7 +763,7 @@ def retrieval_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     quant = similarity.quantize_embeddings(e).select("vec_id", "codes")
     qd = quant.withColumn(
-        "na2", idot(F.col("codes"), F.col("codes"))
+        "na2", similarity._idot(F.col("codes"), F.col("codes")).cast("double")
     ).filter(F.col("na2") > 0)
     iq = qd.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("qid"),
@@ -791,7 +777,7 @@ def retrieval_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qid",
             "vec_id",
             (
-                idot(F.col("codes"), F.col("qc"))
+                similarity._idot(F.col("codes"), F.col("qc")).cast("double")
                 / (F.sqrt("na2") * F.sqrt("nb2"))
             ).alias("cos8"),
         )

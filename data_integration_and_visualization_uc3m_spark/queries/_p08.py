@@ -2316,6 +2316,7 @@ def streaming_pyds_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_stream_manifests,
         register_jsonl_dir,
     )
+    from ..streaming import drain, file_stream
 
     register_jsonl_dir(spark)
     e = _t(spark, sf_dir, "events")
@@ -2324,23 +2325,16 @@ def streaming_pyds_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = f"{work}/out"
     e.repartition(4).write.mode("overwrite").parquet(src_dir)
     stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src_dir)
+        file_stream(spark, e.schema, src_dir, 2)
         .filter(F.col("event_type") != "error")
         .select("event_id", "event_type", "value")
     )
-    q = (
+    drain(
         stream.writeStream.format("jsonl_dir")
         .option("path", out)
         .option("checkpointLocation", f"{work}/ckpt")
         .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     files = [
         _os.path.join(out, p["file"])
         for m in read_stream_manifests(out)

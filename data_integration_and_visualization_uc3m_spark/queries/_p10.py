@@ -1494,19 +1494,14 @@ def two_stage_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings", fanout=True)
     quant = similarity.quantize_embeddings(e).select("vec_id", "codes")
 
-    def idot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("long") * y),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
     q = (
         quant.filter(F.col("vec_id") == 1)
         .select(F.col("codes").alias("qc"))
         .select(
             "qc",
-            F.sqrt(idot(F.col("qc"), F.col("qc")).cast("double")).alias("_qn8"),
+            F.sqrt(
+                similarity._idot(F.col("qc"), F.col("qc")).cast("double")
+            ).alias("_qn8"),
         )
     )
     s1 = (
@@ -1515,8 +1510,8 @@ def two_stage_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "_qn8",
-            idot(F.col("codes"), F.col("codes")).alias("_na2"),
-            (idot(F.col("codes"), F.col("qc")).cast("double")).alias("_dot"),
+            similarity._idot(F.col("codes"), F.col("codes")).alias("_na2"),
+            similarity._idot(F.col("codes"), F.col("qc")).cast("double").alias("_dot"),
         )
         .filter(F.col("_na2") > 0)
         .select(
@@ -1536,19 +1531,12 @@ def two_stage_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long"),
         )
     )
-    def ddot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     qv = (
         e.filter(F.col("vec_id") == 1)
         .select(F.col("embedding").alias("_qe"))
         .select(
             "_qe",
-            F.sqrt(ddot(F.col("_qe"), F.col("_qe"))).alias("_qn"),
+            F.sqrt(similarity._dot(F.col("_qe"), F.col("_qe"))).alias("_qn"),
         )
     )
     v = F.col("embedding")
@@ -1558,8 +1546,8 @@ def two_stage_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "stage1_rank",
-            (ddot(v, F.col("_qe"))
-             / (F.sqrt(ddot(v, v)) * F.col("_qn"))).alias("cosine"),
+            (similarity._dot(v, F.col("_qe"))
+             / (F.sqrt(similarity._dot(v, v)) * F.col("_qn"))).alias("cosine"),
         )
     )
     return (

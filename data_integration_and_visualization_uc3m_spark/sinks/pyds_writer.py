@@ -91,12 +91,53 @@ class PartFileCommit(WriterCommitMessage):
     partition_id: int
 
 
-class JsonlDirWriter(DataSourceWriter):
-    def __init__(self, options, overwrite: bool):
+def _publish(path: str, name: str, messages, final_name, **head) -> set[str]:
+    """Driver side: rename each task's tmp part to ``final_name(tmp)``,
+    then publish manifest ``name`` atomically (tmp + rename). Returns
+    the committed file names."""
+    parts = []
+    for m in messages:
+        if m is None:
+            continue
+        final = final_name(m.tmp_path)
+        os.replace(m.tmp_path, final)
+        parts.append(
+            {
+                "file": os.path.basename(final),
+                "n_rows": m.n_rows,
+                "partition_id": m.partition_id,
+            }
+        )
+    parts.sort(key=lambda p: p["file"])
+    manifest = {
+        **head,
+        "n_rows": sum(p["n_rows"] for p in parts),
+        "n_parts": len(parts),
+        "parts": parts,
+    }
+    tmp = os.path.join(path, name + ".tmp")
+    with open(tmp, "w", encoding="utf-8") as fh:
+        json.dump(manifest, fh, indent=1, sort_keys=True)
+    os.replace(tmp, os.path.join(path, name))
+    return {p["file"] for p in parts}
+
+
+def _sweep_committed(path: str, keep: set[str], prefix: str = "") -> None:
+    """Remove committed ``{prefix}*.jsonl`` parts not in ``keep`` —
+    called only AFTER the manifest that names ``keep`` is published."""
+    for name in os.listdir(path):
+        if name.startswith(prefix) and name.endswith(".jsonl") and name not in keep:
+            os.remove(os.path.join(path, name))
+
+
+class _JsonlPartWriter:
+    """The half the batch and stream writers share: option checks, the
+    job id, the executor-side part write and the abort sweep."""
+
+    def __init__(self, options):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("jsonl_dir sink requires option 'path'")
-        self.overwrite = overwrite
         # test hook: raise inside the task for this partition id, to
         # exercise the abort path (negative = never)
         self.fail_partition = int(options.get("fail_partition", -1))
@@ -106,7 +147,7 @@ class JsonlDirWriter(DataSourceWriter):
         # path keeps its in-flight tmp files (ADVICE r10).
         self.job_id = uuid.uuid4().hex[:12]
 
-    # -- executor side -------------------------------------------------
+    # -- executor side, once per task (per epoch on a stream) ----------
     def write(self, iterator: Iterator) -> PartFileCommit:
         from pyspark import TaskContext
 
@@ -114,6 +155,9 @@ class JsonlDirWriter(DataSourceWriter):
         pid = ctx.partitionId() if ctx is not None else 0
         os.makedirs(self.path, exist_ok=True)
         attempt = ctx.taskAttemptId() if ctx else 0
+        # a stream's batchId is not exposed on the executor; uniqueness
+        # comes from the attempt id + job id, epoch scoping happens at
+        # commit time
         tmp = os.path.join(
             self.path,
             f"part-{pid:05d}-{attempt}-{self.job_id}.jsonl.tmp",
@@ -133,45 +177,7 @@ class JsonlDirWriter(DataSourceWriter):
         _drop_if_aborted(self.path, self.job_id, tmp)
         return PartFileCommit(tmp_path=tmp, n_rows=n, partition_id=pid)
 
-    # -- driver side -----------------------------------------------------
-    def commit(self, messages) -> None:
-        parts = []
-        total = 0
-        for m in messages:
-            final = m.tmp_path[: -len(".tmp")]
-            os.replace(m.tmp_path, final)
-            parts.append(
-                {
-                    "file": os.path.basename(final),
-                    "n_rows": m.n_rows,
-                    "partition_id": m.partition_id,
-                }
-            )
-            total += m.n_rows
-        parts.sort(key=lambda p: p["file"])
-        manifest = {"n_rows": total, "n_parts": len(parts), "parts": parts}
-        tmp = os.path.join(self.path, MANIFEST + ".tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(manifest, fh, indent=1, sort_keys=True)
-        # Publish the new manifest FIRST (atomic rename), THEN sweep
-        # stale committed parts (ADVICE r10): a crash in between leaves
-        # only orphan files that no manifest references — never a live
-        # manifest naming deleted parts. Manifest-honoring readers stay
-        # consistent through the whole window; manifest-ignoring
-        # readers see merged data only inside it.
-        os.replace(tmp, os.path.join(self.path, MANIFEST))
-        if self.overwrite:
-            # mode("overwrite") must not leave prior committed parts
-            # behind: a manifest-ignoring reader would see merged
-            # stale+new data. Remove every committed *.jsonl not in the
-            # just-published manifest (never tmp files of this job —
-            # those were just renamed away).
-            keep = {p["file"] for p in parts}
-            for name in os.listdir(self.path):
-                if name.endswith(".jsonl") and name not in keep:
-                    os.remove(os.path.join(self.path, name))
-
-    def abort(self, messages) -> None:
+    def abort(self, messages, batchId: int | None = None) -> None:
         # messages can contain None for tasks that never returned — a
         # task that raised mid-write leaves an orphan tmp file that no
         # commit message names, so the sweep matches THIS JOB's
@@ -179,6 +185,31 @@ class JsonlDirWriter(DataSourceWriter):
         # (ADVICE r10). Committed parts lost their .tmp suffix at
         # rename and are never touched.
         _abort_sweep(self.path, self.job_id, messages)
+
+
+class JsonlDirWriter(_JsonlPartWriter, DataSourceWriter):
+    def __init__(self, options, overwrite: bool):
+        super().__init__(options)
+        self.overwrite = overwrite
+
+    # -- driver side -----------------------------------------------------
+    def commit(self, messages) -> None:
+        # Publish the new manifest FIRST (atomic rename), THEN sweep
+        # stale committed parts (ADVICE r10): a crash in between leaves
+        # only orphan files that no manifest references — never a live
+        # manifest naming deleted parts. Manifest-honoring readers stay
+        # consistent through the whole window; manifest-ignoring
+        # readers see merged data only inside it.
+        keep = _publish(
+            self.path, MANIFEST, messages, lambda tmp: tmp[: -len(".tmp")]
+        )
+        if self.overwrite:
+            # mode("overwrite") must not leave prior committed parts
+            # behind: a manifest-ignoring reader would see merged
+            # stale+new data. Remove every committed *.jsonl not in the
+            # just-published manifest (never tmp files of this job —
+            # those were just renamed away).
+            _sweep_committed(self.path, keep)
 
 
 class JsonlDirDataSource(DataSource):
@@ -298,14 +329,15 @@ def read_manifest(path: str) -> dict:
         return json.load(fh)
 
 
-class JsonlDirStreamWriter(DataSourceStreamWriter):
+class JsonlDirStreamWriter(_JsonlPartWriter, DataSourceStreamWriter):
     """STREAMING half of the jsonl_dir sink — completes the Spark 4
     Python DataSource surface (batch read sources/pyds.py, stream
     read ibid., batch write above, stream write here). Per micro-batch
     the same two-phase protocol as the batch writer, scoped by epoch:
     tasks stream their partition to
-    ``part-{batch:07d}-{pid:05d}-{attempt}-{job}.jsonl.tmp``, and the
-    driver's ``commit(messages, batchId)`` renames them and publishes
+    ``part-{pid:05d}-{attempt}-{job}.jsonl.tmp``, and the driver's
+    ``commit(messages, batchId)`` renames them to
+    ``part-{batchId:07d}-{pid:05d}-{attempt}-{job}.jsonl`` and publishes
     ``_MANIFEST-{batchId:07d}.json`` atomically — a reader that lists
     manifests sees only complete epochs, in order, which is exactly
     the exactly-once-per-epoch visibility Structured Streaming's sink
@@ -316,93 +348,26 @@ class JsonlDirStreamWriter(DataSourceStreamWriter):
     that epoch (job-id suffix, same concurrent-writer scoping as the
     batch abort)."""
 
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("jsonl_dir stream sink requires option 'path'")
-        self.fail_partition = int(options.get("fail_partition", -1))
-        self.job_id = uuid.uuid4().hex[:12]
-
-    # -- executor side, once per task per epoch ------------------------
-    def write(self, iterator: Iterator) -> PartFileCommit:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        attempt = ctx.taskAttemptId() if ctx else 0
-        # batchId is not exposed on the executor; uniqueness comes from
-        # the attempt id + job id, epoch scoping happens at commit time
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(
-            self.path,
-            f"part-{pid:05d}-{attempt}-{self.job_id}.jsonl.tmp",
-        )
-        n = 0
-        with open(tmp, "w", encoding="utf-8") as fh:
-            for row in iterator:
-                if pid == self.fail_partition:
-                    raise RuntimeError(
-                        f"injected failure in partition {pid}"
-                    )
-                fh.write(
-                    json.dumps(row.asDict(), default=str, sort_keys=True)
-                )
-                fh.write("\n")
-                n += 1
-        _drop_if_aborted(self.path, self.job_id, tmp)
-        return PartFileCommit(tmp_path=tmp, n_rows=n, partition_id=pid)
-
     # -- driver side, once per epoch ------------------------------------
     def commit(self, messages, batchId: int) -> None:
-        parts = []
-        total = 0
-        for m in messages:
-            if m is None:
-                continue
-            final = os.path.join(
+        def final_name(tmp: str) -> str:
+            return os.path.join(
                 self.path,
                 f"part-{batchId:07d}-"
-                + os.path.basename(m.tmp_path)[len("part-"):-len(".tmp")]
+                + os.path.basename(tmp)[len("part-"):-len(".tmp")]
                 + ".jsonl",
             )
-            os.replace(m.tmp_path, final)
-            parts.append(
-                {
-                    "file": os.path.basename(final),
-                    "n_rows": m.n_rows,
-                    "partition_id": m.partition_id,
-                }
-            )
-            total += m.n_rows
-        parts.sort(key=lambda p: p["file"])
-        manifest = {
-            "batch_id": batchId,
-            "n_rows": total,
-            "n_parts": len(parts),
-            "parts": parts,
-        }
-        name = f"_MANIFEST-{batchId:07d}.json"
-        tmp = os.path.join(self.path, name + ".tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(manifest, fh, indent=1, sort_keys=True)
-        os.replace(tmp, os.path.join(self.path, name))
+
+        keep = _publish(
+            self.path, f"_MANIFEST-{batchId:07d}.json", messages, final_name,
+            batch_id=batchId,
+        )
         # a crash-replayed epoch re-runs its tasks under new attempt
         # ids, so a prior attempt's committed parts for THIS batch may
         # linger; sweep them AFTER the manifest replace (same
         # manifest-first ordering as the batch overwrite) so the
         # republished epoch is exactly its manifest
-        keep = {p["file"] for p in parts}
-        prefix = f"part-{batchId:07d}-"
-        for fname in os.listdir(self.path):
-            if (
-                fname.startswith(prefix)
-                and fname.endswith(".jsonl")
-                and fname not in keep
-            ):
-                os.remove(os.path.join(self.path, fname))
-
-    def abort(self, messages, batchId: int) -> None:
-        _abort_sweep(self.path, self.job_id, messages)
+        _sweep_committed(self.path, keep, prefix=f"part-{batchId:07d}-")
 
 
 def read_stream_manifests(path: str) -> list[dict]:

@@ -18,7 +18,6 @@ Spark-side:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def write_parquet_snapshot(
@@ -68,36 +67,6 @@ def jdbc_writer(
         .option("dbtable", table)
         .options(**props)
         .mode(mode)
-    )
-
-
-def write_partitioned_sorted(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-    sort_by: list[str],
-    max_records_per_file: int = 1_000_000,
-) -> None:
-    """Layout-aware warehouse write: hive-partition directories on the
-    coarse key(s) + sort WITHIN each output file on the fine key(s).
-
-    Why this matters at 100 TB: partition directories give Catalyst
-    partition PRUNING (a `lang='en'` filter never lists other dirs),
-    and the within-file sort tightens parquet row-group min/max stats
-    on the sort key so row-group SKIPPING kicks in for range predicates
-    — the two cheapest reads are the ones that never happen.
-    ``maxRecordsPerFile`` bounds file size regardless of partition
-    skew; `repartition(partition_by)` before the write gives one task
-    per partition directory instead of every task writing to every
-    directory (the small-files explosion).
-    """
-    (
-        df.repartition(*[F.col(c) for c in partition_by])
-        .sortWithinPartitions(*sort_by)
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy(*partition_by)
-        .parquet(path)
     )
 
 

@@ -42,6 +42,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from ..streaming import drain
 from .api import parse_envelope
 
 
@@ -187,7 +188,7 @@ def run_rest_poll_stream(
     """Drive the REST-poll stream to exhaustion into a memory sink
     (append mode — every fetched row lands exactly once; duplicates
     from a replayed batch would double-count and fail the oracle).
-    Synchronous: processAllAvailable + stop. Returns the raw rows."""
+    Synchronous (``streaming.drain``). Returns the raw rows."""
     spark.dataSource.register(PaginatedRestDataSource)
     stream = (
         spark.readStream.format("paginated_rest")
@@ -199,14 +200,9 @@ def run_rest_poll_stream(
         .option("fetcher", fetcher)
         .load()
     )
-    q = (
+    drain(
         stream.writeStream.outputMode("append")
         .format("memory")
         .queryName(query_name)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.sql(f"SELECT * FROM {query_name}")

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..operators import similarity
 from ..schemas import TESTDATA
+from . import drain, file_stream
 
 EMB_STREAM_SCHEMA = TESTDATA["embeddings"]
 
@@ -69,21 +70,11 @@ def run_stream_ann_index(
     and ``state_dir`` live and die together."""
 
     sink = make_index_sink(spark, state_dir, k, cell_cap)
-
-    stream = (
-        spark.readStream.schema(EMB_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
+    drain(
+        file_stream(spark, EMB_STREAM_SCHEMA, source_dir)
+        .writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def make_index_sink(spark: SparkSession, state_dir: str,

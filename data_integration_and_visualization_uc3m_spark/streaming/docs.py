@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import TESTDATA
+from . import drain, file_stream
 
 DOCS_STREAM_SCHEMA = TESTDATA["documents"]
 
@@ -165,20 +166,11 @@ def run_stream_lsh_dedup(
         finally:
             buckets.unpersist()
 
-    stream = (
-        spark.readStream.schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
+    drain(
+        file_stream(spark, DOCS_STREAM_SCHEMA, source_dir)
+        .writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def curate_stream(stream: DataFrame, keep_frac: float = 0.5,
@@ -236,20 +228,11 @@ def run_stream_curate_to_parquet(
     exactly-once parquet file sink. Deterministic predicates ⇒ the
     output row set equals the batch run of the same transform, which
     is what the oracle asserts."""
-    stream = (
-        spark.readStream.schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(source_dir)
-    )
-    q = (
+    stream = file_stream(spark, DOCS_STREAM_SCHEMA, source_dir, 2)
+    drain(
         curate_stream(stream, keep_frac, seed, tau)
         .writeStream.outputMode("append")
         .format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import drain, file_stream
+
 # Streaming-side schema: ts arrives as a proper timestamp (streams
 # wouldn't carry the testdata's NANOS quirk; the file-source test
 # converts first).
@@ -150,22 +152,13 @@ def run_stream_stateful_totals(
     def sink(batch_df, epoch_id: int) -> None:
         write_upsert_parquet(target_path, batch_df, ["user_id"], mode="replace")
 
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    q = (
+    stream = file_stream(spark, EVENTS_STREAM_SCHEMA, source_dir)
+    drain(
         running_user_totals_exact(stream)
         .writeStream.foreachBatch(sink)
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def sliding_agg(
@@ -298,20 +291,11 @@ def run_stream_foreach_batch_upsert(
             compact_snapshot(spark, target_path)
             vacuum(target_path, keep_last=max(3, compact_every))
 
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    q = (
+    stream = file_stream(spark, EVENTS_STREAM_SCHEMA, source_dir)
+    drain(
         stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def run_stream_dedup_to_parquet(
@@ -339,23 +323,14 @@ def run_stream_dedup_to_parquet(
     from ..session import tune
 
     tune(spark)
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    q = (
+    stream = file_stream(spark, EVENTS_STREAM_SCHEMA, source_dir)
+    drain(
         dedup_stream(stream, watermark)
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def run_stream_attribution_to_parquet(
@@ -378,27 +353,18 @@ def run_stream_attribution_to_parquet(
     from ..session import tune
 
     tune(spark)
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
+    stream = file_stream(spark, EVENTS_STREAM_SCHEMA, source_dir)
     views = stream.filter(F.col("event_type") == "view")
     purchases = stream.filter(F.col("event_type") == "purchase")
     joined = stream_stream_attribution_join(
         views, purchases, max_gap=max_gap, watermark=watermark
     )
-    q = (
+    drain(
         joined.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def run_stream_to_memory(
@@ -409,26 +375,17 @@ def run_stream_to_memory(
 ) -> DataFrame:
     """Drive a file-source stream to completion against a directory of
     parquet events (micro-batch per file), landing in a memory sink.
-    Synchronous: processAllAvailable + stop. Returns the result table."""
+    Synchronous (:func:`drain`). Returns the result table."""
     from ..session import tune
 
     tune(spark)
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    q = (
+    stream = file_stream(spark, EVENTS_STREAM_SCHEMA, source_dir)
+    drain(
         agg(stream)
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName(query_name)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.sql(f"SELECT * FROM {query_name}")
 
 
@@ -444,23 +401,14 @@ def run_stream_enrich_to_parquet(
     (enrich_stream — stateless, no state store), appended to parquet
     through the exactly-once file-sink commit log. Output contents
     equal the batch join's, which is what the oracle asserts."""
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(source_dir)
-    )
-    q = (
+    stream = file_stream(spark, EVENTS_STREAM_SCHEMA, source_dir, 2)
+    drain(
         enrich_stream(stream, dim)
         .writeStream.outputMode("append")
         .format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def run_stream_sessionized_to_parquet(
@@ -493,20 +441,11 @@ def run_stream_sessionized_to_parquet(
     from ..session import tune
 
     tune(spark)
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    q = (
+    stream = file_stream(spark, EVENTS_STREAM_SCHEMA, source_dir)
+    drain(
         sessionized_agg(stream.withWatermark("ts", watermark), gap)
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()

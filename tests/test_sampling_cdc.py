@@ -309,26 +309,6 @@ def test_balance_to_min_stratum(spark):
     )
 
 
-def test_cap_per_group_bound_and_stability(spark):
-    from data_integration_and_visualization_uc3m_spark.operators import sampling
-
-    rows = [(i, "s%d" % (i % 3)) for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    kept = sampling.cap_per_group(df, "source", 5, "doc_id").collect()
-    per = {}
-    for r in kept:
-        per[r.source] = per.get(r.source, 0) + 1
-    assert per == {"s0": 5, "s1": 5, "s2": 5}
-    # determinism: same seed → identical pick; growing the corpus keeps
-    # previously-kept rows only if their hash rank still clears the cap,
-    # but re-running on identical input is always identical
-    again = {r.doc_id for r in sampling.cap_per_group(df, "source", 5, "doc_id").collect()}
-    assert {r.doc_id for r in kept} == again
-    # a group under the cap is untouched
-    small = spark.createDataFrame([(1, "x"), (2, "x")], "doc_id long, source string")
-    assert sampling.cap_per_group(small, "source", 5, "doc_id").count() == 2
-
-
 def test_curriculum_order_is_total_and_bucket_monotone(spark):
     from data_integration_and_visualization_uc3m_spark.operators import mixing
 

@@ -290,31 +290,6 @@ def test_jdbc_writer_is_configured_only(spark):
     assert w is not None  # construct-only: no driver jar in this image
 
 
-def test_write_partitioned_sorted_layout_and_pruning(spark, tmp_path):
-    import os
-    from data_integration_and_visualization_uc3m_spark.sinks import writers
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(i, ["en", "fr"][i % 2], float(i)) for i in range(200)],
-        "doc_id long, lang string, score double",
-    )
-    out = str(tmp_path / "warehouse")
-    writers.write_partitioned_sorted(
-        df, out, partition_by=["lang"], sort_by=["score"], max_records_per_file=1000
-    )
-    # hive-style partition directories exist
-    assert sorted(
-        d for d in os.listdir(out) if d.startswith("lang=")
-    ) == ["lang=en", "lang=fr"]
-    back = spark.read.parquet(out)
-    assert back.count() == 200
-    # a lang filter prunes to one partition directory in the plan
-    plan = back.filter(F.col("lang") == "en")._jdf.queryExecution().executedPlan().toString()
-    assert "lang=fr" not in plan
-    assert back.filter(F.col("lang") == "en").count() == 100
-
-
 def test_parquet_schema_evolution_merge(spark):
     # files written before a column existed must read back with NULLs,
     # not fail — the long-lived-table contract. The registered query

@@ -3,7 +3,11 @@ against the batch twin (unified-API parity)."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import StreamingQueryException
+
 from data_integration_and_visualization_uc3m_spark.sources.readers import load_table
+from data_integration_and_visualization_uc3m_spark.streaming import drain, file_stream
 from data_integration_and_visualization_uc3m_spark.streaming import events as se
 
 SF = "/root/testdata/sf0.001"
@@ -18,6 +22,21 @@ def _prepare_stream_dir(spark, tmp_path) -> str:
     return out
 
 
+def test_drain_reraises_a_failed_batch_and_stops_the_query(spark, tmp_path):
+    src_dir = _prepare_stream_dir(spark, tmp_path)
+
+    def sink(batch_df, epoch_id):
+        raise RuntimeError("sink rejected the batch")
+
+    with pytest.raises(StreamingQueryException, match="sink rejected the batch"):
+        drain(
+            file_stream(spark, se.EVENTS_STREAM_SCHEMA, src_dir)
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+        )
+    assert spark.streams.active == []
+
+
 def test_stream_hourly_agg_matches_batch(spark, tmp_path):
     src_dir = _prepare_stream_dir(spark, tmp_path)
     stream_result = se.run_stream_to_memory(spark, src_dir, "t_hourly")
@@ -30,22 +49,13 @@ def test_stream_hourly_agg_matches_batch(spark, tmp_path):
 
 def test_stateful_running_totals(spark, tmp_path):
     src_dir = _prepare_stream_dir(spark, tmp_path)
-    stream = (
-        spark.readStream.schema(se.EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src_dir)
-    )
-    q = (
+    stream = file_stream(spark, se.EVENTS_STREAM_SCHEMA, src_dir, 2)
+    drain(
         se.running_user_totals_exact(stream)
         .writeStream.outputMode("update")
         .format("memory")
         .queryName("t_state")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # last update per user must equal the batch ground truth
     from pyspark.sql import functions as F
 
@@ -75,22 +85,13 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
     base = load_table(spark, SF, "events").limit(200)
     dupes = base.union(base)  # every event twice
     dupes.repartition(2).write.parquet(src)
-    stream = (
-        spark.readStream.schema(se.EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
+    stream = file_stream(spark, se.EVENTS_STREAM_SCHEMA, src)
+    drain(
         se.dedup_stream(stream)
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("t_dedup")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     got = spark.sql("SELECT count(DISTINCT event_id) AS d, count(*) AS n FROM t_dedup").first()
     assert got.d == got.n  # no duplicate ids delivered downstream
     assert got.n == base.count()
@@ -136,22 +137,13 @@ def test_stream_static_enrich_broadcast(spark, tmp_path):
     dim = users.filter(F.col("user_id") % 2 == 0).withColumn(
         "segment", F.lit("even")
     )
-    stream = (
-        spark.readStream.schema(se.EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src_dir)
-    )
-    q = (
+    stream = file_stream(spark, se.EVENTS_STREAM_SCHEMA, src_dir, 2)
+    drain(
         se.enrich_stream(stream, dim)
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("t_enrich")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     got = spark.sql("SELECT * FROM t_enrich")
     assert got.count() == spark.read.parquet(src_dir).count()  # left join keeps all
     assert got.filter(
@@ -408,12 +400,10 @@ def test_watermark_drops_late_data_e2e(spark, tmp_path):
         shutil.copyfile(glob.glob(f"{tmp}/part-*.parquet")[0], dst)
         os.utime(dst, (now + c, now + c))
 
-    stream = (
-        spark.readStream.schema(se.EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = file_stream(spark, se.EVENTS_STREAM_SCHEMA, src)
     out = str(tmp_path / "late_out")
+    # started by hand, not through drain: the assertions below read the
+    # query's progress
     q = (
         se.hourly_agg(stream)
         .writeStream.outputMode("append")

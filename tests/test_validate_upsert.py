@@ -79,6 +79,28 @@ def test_write_upsert_parquet_double_run_idempotent(spark, tmp_path):
     assert first == second == [("A", 1, 10), ("B", 2, 20)]
 
 
+def test_merged_plans_against_live_snapshot_without_a_job(spark, tmp_path):
+    # the live snapshot is read with the batch's schema: planning the
+    # next snapshot infers nothing, so it launches no Spark job
+    root = str(tmp_path / "tbl")
+    batch = spark.createDataFrame([("A", 1, 10), ("B", 2, 20)], "k string, y int, v long")
+    upsert.write_upsert_parquet(root, batch, ["k", "y"], order_by=["v"])
+    fresh = spark.createDataFrame([("A", 1, 5), ("C", 3, 30)], "k string, y int, v long")
+    sc = spark.sparkContext
+    sc.setJobGroup("merged_plan", "plan the next snapshot")
+    try:
+        merged, live = upsert._merged(root, fresh, ["k", "y"], ["v"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("merged_plan")) == []
+    assert live == upsert.current_snapshot(root)
+    assert sorted(map(tuple, merged.collect())) == [
+        ("A", 1, 10), ("B", 2, 20), ("C", 3, 30)
+    ]
+
+
 def test_write_upsert_parquet_crash_mid_write_leaves_old_snapshot(spark, tmp_path):
     # A half-written snapshot dir that the manifest never references
     # must be invisible to readers; the next successful commit flips
@@ -380,22 +402,3 @@ def test_merge_full_three_clauses(spark):
     assert out[1].v == 10.0 and out[1].tag == "a"   # untouched
     assert out[2].v == 99.0 and out[2].tag == "b"   # v updated, tag kept
     assert out[4].v == 40.0 and out[4].tag == "d"   # full insert
-
-
-def test_expect_schema_contract(spark):
-    from data_integration_and_visualization_uc3m_spark.operators import validate
-
-    df = spark.createDataFrame([(1, "x", 2.0)], "id long, name string, v double")
-    got = {
-        r.column: r.status
-        for r in validate.expect_schema(
-            df, {"id": "bigint", "name": "int", "missing_col": "string"}
-        ).collect()
-    }
-    assert got == {"id": "ok", "name": "type_mismatch", "missing_col": "missing"}
-    strict = {
-        r.column: r.status
-        for r in validate.expect_schema(df, {"id": "bigint"}, strict=True).collect()
-    }
-    assert strict["v"] == "unexpected" and strict["name"] == "unexpected"
-    assert strict["id"] == "ok"

@@ -51,57 +51,6 @@ def test_morton_locality_beats_linear_sort(spark):
     assert sum(r.n_rows for r in stats) == len(rows)
 
 
-def test_zorder_write_tightens_both_dims_footer_stats(spark, tmp_path):
-    """The clustered write's value is measurable in the parquet footers:
-    per-file min/max spans on BOTH dimensions are far tighter than a
-    linear sort's second-dimension spans — that footer tightness IS the
-    data-skipping win (Spark prunes row groups on these stats)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    rows = [(x, y) for x in range(256) for y in range(0, 256, 8)]
-    df = spark.createDataFrame(rows, "a long, b long")
-
-    zpath = str(tmp_path / "zorded")
-    zorder.zorder_write(df, zpath, "a", "b", n_files=8)
-    lpath = str(tmp_path / "linear")
-    df.repartitionByRange(8, "a").sortWithinPartitions("a").write.parquet(lpath)
-
-    def spans(path):
-        out = []
-        for f in sorted(glob.glob(f"{path}/part-*.parquet")):
-            md = pq.ParquetFile(f).metadata
-            mins = {"a": None, "b": None}
-            maxs = {"a": None, "b": None}
-            for rg in range(md.num_row_groups):
-                for ci in range(md.num_columns):
-                    col = md.row_group(rg).column(ci)
-                    name = col.path_in_schema
-                    st = col.statistics
-                    if name in mins and st is not None:
-                        mins[name] = st.min if mins[name] is None else min(mins[name], st.min)
-                        maxs[name] = st.max if maxs[name] is None else max(maxs[name], st.max)
-            if mins["a"] is not None:
-                out.append((maxs["a"] - mins["a"], maxs["b"] - mins["b"]))
-        return out
-
-    z = spans(zpath)
-    lin = spans(lpath)
-    assert len(z) >= 4 and len(lin) >= 4
-    # linear sort: second dim spans the whole 0..248 domain in every file
-    assert all(sb >= 240 for (_, sb) in lin)
-    # z-order: MEAN spans bounded well below the domain on BOTH dims.
-    # (A file straddling a major z-quadrant boundary can still span one
-    # full axis — inherent to the curve — so the per-file bound is on
-    # the average, which is what expected-files-skipped depends on.)
-    assert sum(sa for sa, _ in z) / len(z) <= 200
-    assert sum(sb for _, sb in z) / len(z) <= 140
-    # and the data survives the rewrite intact
-    back = sorted(map(tuple, spark.read.parquet(zpath).collect()))
-    assert back == sorted(rows)
-
-
 def test_zone_map_skipping_known_answers(spark, tmp_path):
     """Three synthetic files with hand-placed min/max: file 0 (all $50)
     is skippable for every predicate, file 1 (all $400k) only for the

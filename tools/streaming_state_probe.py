@@ -130,73 +130,22 @@ def stage_ordered(spark, k: int, work: str) -> str:
 
 
 def run_attribution(spark, src: str, work: str) -> int:
-    from pyspark.sql import functions as F
+    from data_integration_and_visualization_uc3m_spark.streaming import events
 
-    from data_integration_and_visualization_uc3m_spark.streaming.events import (
-        EVENTS_STREAM_SCHEMA,
-        stream_stream_attribution_join,
-    )
-
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    joined = stream_stream_attribution_join(
-        stream.filter(F.col("event_type") == "view"),
-        stream.filter(F.col("event_type") == "purchase"),
-        max_gap=GAP,
-        watermark=WATERMARK,
-    )
     out = f"{work}/attr_out"
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", f"{work}/attr_ckpt")
-        .outputMode("append")
-        .start()
+    events.run_stream_attribution_to_parquet(
+        spark, src, out, f"{work}/attr_ckpt", max_gap=GAP, watermark=WATERMARK
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.read.parquet(out).count()
 
 
 def run_sessionize(spark, src: str, work: str) -> int:
-    from pyspark.sql import functions as F
+    from data_integration_and_visualization_uc3m_spark.streaming import events
 
-    from data_integration_and_visualization_uc3m_spark.streaming.events import (
-        EVENTS_STREAM_SCHEMA,
-    )
-
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    sessions = (
-        stream.withWatermark("ts", WATERMARK)
-        .groupBy(F.session_window("ts", GAP).alias("sess"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("sess.start").alias("session_start"),
-            "user_id",
-            "n_events",
-        )
-    )
     out = f"{work}/sess_out"
-    q = (
-        sessions.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", f"{work}/sess_ckpt")
-        .outputMode("append")
-        .start()
+    events.run_stream_sessionized_to_parquet(
+        spark, src, out, f"{work}/sess_ckpt", gap=GAP, watermark=WATERMARK
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.read.parquet(out).count()
 
 
